@@ -42,23 +42,6 @@ class CrawlConfig:
     # to this subset ONCE (cached) instead of rescanning the full corpus at
     # every recursion level
     sitemap_url_pattern: str = r"(?i)\.xml$"
-    # number of salt buckets for the two-phase hot-host dequeue (1 = off)
-    salt_buckets: int = 8
-    # pending-set size (manifest's arithmetic counter) below which the
-    # dequeue skips the at-scale machinery (salt pruning + sampled
-    # range-partition global rank — a sampling pass, a range exchange, a
-    # persist and a count-collect job per round) for one exact window:
-    # identical output, measured ~2.5x cheaper when pending fits one sort
-    # task. Scale-adaptive: a growing frontier flips back automatically.
-    dequeue_small_max_pending: int = 200_000
-    # frontier size below which the Bloom prefilter's per-round jobs cost
-    # more than the plain anti-join they'd accelerate (exact join is always
-    # the correctness backstop)
-    bloom_min_frontier: int = 2_000_000
-    # URL-seen bloom shards (bloom-per-bucket): at 10^10 keys use ~1024 so
-    # each shard's bitmap stays ~10 MB; locally 16 keeps per-shard sizing
-    # honest without per-round overhead
-    bloom_shards: int = 16
     # wall-clock politeness: one round represents this many seconds (the
     # reference's cron tick). crawl_delay ≤ T → floor(T/delay) fetches per
     # round (capped at base_host_budget); crawl_delay > T → the host sleeps

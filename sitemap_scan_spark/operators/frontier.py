@@ -9,14 +9,13 @@ window dequeue:
   per-host     row_number() over that order ≤ budget(host)
   budget(host) = max(1, base // crawl_delay)   (politeness)
   global cap   orderBy(key).limit(round_size)  (TakeOrdered — no full sort)
+  rank         row_number() over the ≤ round_size capped rows
 
-Hot-host skew (north rule): a single host owning 50 % of the frontier makes
-the naive per-host window one giant partition. We run a TWO-PHASE dequeue:
-phase 1 ranks within (host, salt) buckets — salt = pmod(xxhash64(url_canon),
-K) — keeping ≤ budget rows per bucket (semantics-preserving pruning: any row
-outside the per-bucket top-budget cannot be in the per-host top-budget);
-phase 2 ranks the ≤ K·budget survivors per host exactly. The skewed shuffle
-now moves ≤ K·budget rows per host instead of the whole hot host.
+Hot-host skew: the per-host filter carries the literal ``base_budget`` as a
+redundant conjunct, so Catalyst plans a map-side ``WindowGroupLimit
+Partial`` before the per-host shuffle. Each map partition forwards at most
+``base_budget`` rows per host, so a host owning half the frontier shuffles
+at most P × base_budget rows, not its whole pending set.
 """
 
 from __future__ import annotations
@@ -57,7 +56,8 @@ def parallel_global_rank(
        (one tiny count job) — contiguous, deterministic, never serial.
 
     Returns (ranked_df, persisted_handle, total_rows); the caller unpersists
-    the handle after materializing.
+    the handle after materializing. It ranks EVERY row (the revisit
+    ``seq``); a rank capped at k is a top-k instead (see :func:`dequeue`).
 
     (A collect-free variant — offsets computed in-query via a broadcast
     join — was measured SLOWER on the crawl path: every action consuming
@@ -186,131 +186,38 @@ def host_budget_col(base_budget: int, period: int | None = None) -> Column:
     ).otherwise(F.lit(base_budget)).cast("int")
 
 
-SALT_COL = "_salt"
-
-
-def salt_col(salt_buckets: int) -> Column:
-    """The dequeue's phase-1 salt: ``pmod(xxhash64(url_canon), K)``.
-    Callers that keep a pending cache MATERIALIZE this as ``_salt`` and
-    hash-partition the cache on (host, _salt) — then :func:`phase1_prune`'s
-    window reuses the cached partitioning and never shuffles the cache."""
-    return F.pmod(F.xxhash64("url_canon"), F.lit(salt_buckets)).cast("int")
-
-
-def phase1_prune(
-    df: DataFrame, salt_buckets: int, base_budget: int | None = None
-) -> DataFrame:
-    """Phase 1 of the two-phase dequeue: keep ≤ ``_budget`` rows per
-    (host, salt) bucket — semantics-preserving pruning (any row outside the
-    per-bucket top-budget cannot be in the per-host top-budget; this holds
-    per SUBSET too, so callers may run phase 1 independently on cache
-    parts — pruning a subset only keeps MORE rows, and phase 2 is exact).
-
-    ``df`` needs ``_budget``; if it carries a materialized ``_salt`` column
-    the window partitions on it — a df hash-partitioned on (host, _salt)
-    (the engine's pending-base cache) is ranked IN PLACE with no Exchange,
-    which is what makes the per-round dequeue O(round): the O(pending)
-    cache never re-shuffles. Otherwise the salt is computed on the fly
-    (one full shuffle — the cold/ad-hoc path).
-
-    ``base_budget`` (the literal cap that ``_budget`` never exceeds — see
-    :func:`host_budget_col`) is added as a redundant conjunct on the rank
-    filter: Catalyst's InferWindowGroupLimit only fires on LITERAL bounds,
-    and with it the planner inserts a map-side partial top-k
-    (WindowGroupLimit Partial) BEFORE the window's exchange/sort — the
-    cold/tail shuffle moves ≤ base_budget rows per (host, salt) group per
-    map partition instead of everything, and even the exchange-free
-    partitioned-base path replaces its full per-group sort with a top-k."""
-    salt = F.col(SALT_COL) if SALT_COL in df.columns else salt_col(salt_buckets)
-    w1 = Window.partitionBy("host", salt).orderBy(*order_key())
-    rank_ok: Column = F.col("_r1") <= F.col("_budget")
-    if base_budget is not None:
-        rank_ok = (F.col("_r1") <= F.lit(base_budget)) & rank_ok
-    return (
-        df.withColumn("_r1", F.row_number().over(w1))
-        .filter(rank_ok)
-        .drop("_r1")
-    )
-
-
 def dequeue(
     eligible: DataFrame | list[DataFrame],
     base_budget: int,
     round_size: int,
-    salt_buckets: int = 8,
     period: int | None = None,
-    small_input: bool = False,
 ) -> DataFrame:
     """Select this round's fetch set with a 1-based global ``rank``.
 
     ``eligible`` needs (url_canon, host, depth, priority, discovered_round,
-    crawl_delay). Returns the same columns + rank, ≤ round_size rows.
+    crawl_delay); a LIST of DataFrames (disjoint parts of the same pending
+    set — the engine's partitioned base + round-sized tail) is unioned
+    first. Returns the same columns + rank, ≤ round_size rows, PERSISTED:
+    the caller consumes it from several actions (the fetch join's broadcast
+    key side, the write job) and unpersists it afterwards.
 
-    A LIST of DataFrames (disjoint parts of the same pending set — the
-    engine's partitioned base + round-sized tail) is accepted: phase 1
-    prunes each part independently (superset invariant above), the parts'
-    survivors union, and phase 2 ranks exactly — output is identical to a
-    single-part dequeue of the union, but a pre-partitioned part is never
-    shuffled.
-
-    ``small_input=True`` (caller KNOWS the pending set is small, e.g. from
-    the manifest's arithmetic pending counter) short-circuits the at-scale
-    machinery: no phase-1 salt pruning, and the global rank is one exact
-    window over the per-host survivors instead of the sampled
-    range-repartition + bucket-offset rank. The big path plans a sampling
-    pass over the survivors subtree, a range exchange, a persist and a
-    count-collect job EVERY round — pure fixed cost when pending fits one
-    sort task (measured 0.89 s vs 0.35 s on a 20k-row pending set). Output
-    is bit-identical either way: both ranks realize the same total order
-    (priority desc, depth, discovered_round, url_canon)."""
+    One plan at every scale: per-host ``row_number`` (the literal
+    ``base_budget`` conjunct lets InferWindowGroupLimit prune map-side
+    before the per-host shuffle), then ``orderBy(order_key()).limit``
+    (TakeOrderedAndProject: P × round_size rows merged, never a global
+    sort), then a ``row_number`` over those ≤ round_size rows."""
     parts = list(eligible) if isinstance(eligible, (list, tuple)) else [eligible]
-    budget = host_budget_col(base_budget, period)
-    pruned = []
-    for p in parts:
-        d = p.withColumn("_budget", budget)
-        if salt_buckets > 1 and not small_input:
-            d = phase1_prune(d, salt_buckets, base_budget)
-        if SALT_COL in d.columns:
-            d = d.drop(SALT_COL)
-        pruned.append(d)
-    df = pruned[0]
-    for p in pruned[1:]:
+    df = parts[0]
+    for p in parts[1:]:
         df = df.unionByName(p)
-
-    # the literal base_budget conjunct (always implied by _budget ≤ base)
-    # lets InferWindowGroupLimit plan a map-side partial top-k before the
-    # per-host shuffle — see phase1_prune
-    w2 = Window.partitionBy("host").orderBy(*order_key())
+    w_host = Window.partitionBy("host").orderBy(*order_key())
     survivors = (
-        df.withColumn("_r2", F.row_number().over(w2))
-        .filter((F.col("_r2") <= F.lit(base_budget)) & (F.col("_r2") <= F.col("_budget")))
-        .drop("_r2", "_budget")
+        df.withColumn("_budget", host_budget_col(base_budget, period))
+        .withColumn("_r", F.row_number().over(w_host))
+        .filter((F.col("_r") <= F.lit(base_budget)) & (F.col("_r") <= F.col("_budget")))
+        .drop("_r", "_budget")
     )
-
-    if small_input:
-        wg = Window.orderBy(*order_key())
-        ranked = (
-            survivors.withColumn("rank", F.row_number().over(wg).cast("int"))
-            .filter(F.col("rank") <= round_size)
-            .persist()
-        )
-        # the caller consumes `taken` from several actions per round (the
-        # fetch join's broadcast key side, the write job); without the
-        # persist each one re-runs both windows over the pending cache
-        ranked._ssc_persisted = ranked
-        return ranked
-
-    # Global rank + cap via the parallel global rank (range repartition +
-    # bucket offsets) — never a single-partition Window.orderBy merge.
-    # Measured (3-round crawl, sf0.1-scale corpus, warm): the eager
-    # collect beats lazy=True here — `taken` is consumed by several
-    # actions per round, and each would re-materialize the lazy offsets'
-    # broadcast subplan, costing more launches than the one collect saves.
-    ranked, bucketed, _total = parallel_global_rank(
-        survivors, order_key(), rank_name="rank", start=1
-    )
-    ranked = ranked.filter(F.col("rank") <= round_size)
-    # expose the cached intermediate so the caller can unpersist after
-    # materializing (at most one round's survivors ever sit in cache)
-    ranked._ssc_persisted = bucketed
-    return ranked
+    top = survivors.orderBy(*order_key()).limit(round_size)
+    return top.withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order_key())).cast("int")
+    ).persist()

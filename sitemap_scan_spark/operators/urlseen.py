@@ -1,537 +1,21 @@
-"""URL-seen dedup: exact left-anti join with a broadcast Bloom prefilter.
+"""URL-seen dedup: an exact left-anti join against the seen keys.
 
 The reference's incremental-discovery core is a set-membership filter
 (``canonicalNow.filter(url => !previousSnapshot.has(url))``,
-/root/reference/src/backup/fetcher.ts:497-505). Distributed re-expression
-(SURVEY §2.4 D3 + §4 custom technique 3):
-
-- hashes computed JVM-side (``xxhash64`` twice → classic double hashing
-  h_i = h1 + i·h2), so no string ever crosses into Python;
-- per-partition partial Bloom bitmaps built with vectorized numpy inside
-  ``mapInPandas``, OR-merged on the driver, broadcast back;
-- probe side drops definite-negatives (the common case for genuinely new
-  URLs) WITHOUT shuffling them into the join; only Bloom-positive candidates
-  go through the exact ``left_anti`` join — the correctness backstop, so
-  Bloom false positives can never drop a URL (SURVEY §7.3 risk 3).
-
-Scale note (10^10 seen URLs): a single bitmap at 10 bits/key is ~12 GB —
-too big to broadcast or OR-merge on one driver. :class:`ShardedBloom` is
-the scale path: the key space sharded by ``pmod(xxhash64(url, 2), P)``,
-one independently-built/shipped bitmap per shard, probes routed by the
-same pmod. :class:`IncrementalBloom` (single bitmap) remains as the
-small-scale variant and the equivalence baseline in tests.
+/root/reference/src/backup/fetcher.ts:497-505). Distributed, it is a
+``left_anti`` join on ``url_canon`` (SURVEY §2.4 D3). The engine keeps its
+seen keys persisted and hash-partitioned on ``url_canon``
+(``CrawlEngine._set_seen_base``), so the join plans no Exchange on the seen
+side: only the round-sized candidate set shuffles. A membership prefilter
+could at best drop some of those candidate rows, and measured slower than
+the join it would skip (BENCH/BASELINE.md, bloom A/B).
 """
 
 from __future__ import annotations
 
-import json
-import math
-import os
-import shutil
-from functools import lru_cache
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    IntegerType,
-    StructField,
-    StructType,
-)
-
-
-def _bloom_params(n: int, fpp: float = 0.01) -> tuple[int, int]:
-    n = max(n, 1)
-    m = int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
-    m = max(64, (m + 7) // 8 * 8)
-    k = max(1, min(8, round(m / n * math.log(2))))
-    return m, k
-
-
-def _with_hashes(df: DataFrame, col: str) -> DataFrame:
-    return df.withColumn("_h1", F.xxhash64(F.col(col))).withColumn(
-        "_h2", F.xxhash64(F.col(col), F.lit(1))
-    )
-
-
-def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
-    """(k, n) bit positions via double hashing, all-uint64 vectorized."""
-    u1 = h1.astype(np.int64).view(np.uint64)
-    u2 = h2.astype(np.int64).view(np.uint64)
-    i = np.arange(k, dtype=np.uint64)[:, None]
-    return (u1[None, :] + i * u2[None, :]) % np.uint64(m)
-
-
-class IncrementalBloom:
-    """A Bloom filter maintained ACROSS rounds: built once from the initial
-    frontier, then OR-updated with each round's (small) insert set — so no
-    round ever rescans the full URL-seen set to rebuild it. ``m`` is sized
-    from ``expected_total`` (the corpus-scale estimate), not the current
-    count, so the false-positive rate holds as the frontier grows."""
-
-    def __init__(self, expected_total: int, fpp: float = 0.01):
-        self.m, self.k = _bloom_params(expected_total, fpp)
-        self.bits = np.zeros(self.m // 8, dtype=np.uint8)
-
-    def update(self, df: DataFrame, col: str = "url_canon") -> None:
-        """OR-merge the hashes of ``df[col]`` into the bitmap (one job over
-        df only — never over the accumulated set)."""
-        m, k = self.m, self.k
-        schema = StructType([StructField("bits", BinaryType())])
-
-        def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            any_rows = False
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                any_rows = True
-                pos = _positions(
-                    pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), k, m
-                ).ravel()
-                np.bitwise_or.at(
-                    bits, pos >> np.uint64(3), (1 << (pos & np.uint64(7))).astype(np.uint8)
-                )
-            if any_rows:
-                yield pd.DataFrame({"bits": [bits.tobytes()]})
-
-        partials = _with_hashes(df.select(col), col).select("_h1", "_h2").mapInPandas(
-            partial, schema
-        )
-        for row in partials.collect():
-            self.bits |= np.frombuffer(row.bits, dtype=np.uint8)
-
-    def prefiltered_anti_join(
-        self, candidates: DataFrame, seen: DataFrame, col: str = "url_canon"
-    ) -> DataFrame:
-        """candidates ∖ seen: Bloom-negative rows pass immediately; only
-        Bloom-positive rows go through the exact left_anti backstop."""
-        spark = candidates.sparkSession
-        bc = spark.sparkContext.broadcast(self.bits.tobytes())
-        m, k = self.m, self.k
-
-        @F.pandas_udf(BooleanType())
-        def maybe_seen(h1: pd.Series, h2: pd.Series) -> pd.Series:
-            bits = np.frombuffer(bc.value, dtype=np.uint8)
-            pos = _positions(h1.to_numpy(), h2.to_numpy(), k, m)
-            hit = (
-                bits[pos >> np.uint64(3)] & (1 << (pos & np.uint64(7))).astype(np.uint8)
-            ) != 0
-            return pd.Series(hit.all(axis=0))
-
-        with_flag = _with_hashes(candidates, col).withColumn(
-            "_maybe", maybe_seen("_h1", "_h2")
-        )
-        definite_new = with_flag.filter(~F.col("_maybe")).drop("_h1", "_h2", "_maybe")
-        needs_check = with_flag.filter(F.col("_maybe")).drop("_h1", "_h2", "_maybe")
-        checked = needs_check.join(seen.select(col), col, "left_anti")
-        return definite_new.unionByName(checked)
-
-
-def _shard_file(dir_: str, shard: int, gen: int) -> str:
-    """Generation-named shard file: every rewrite lands in a NEW filename,
-    so executor caches can key on the path alone — no mtime trust. (On NFS
-    attribute caching / coarse-mtime filesystems an mtime-keyed cache can
-    serve a rewritten shard stale, which in update() silently drops bits
-    and in split() misroutes seen URLs past the exact backstop.)"""
-    return os.path.join(dir_, f"shard_{shard:05d}.g{gen:06d}.bloom")
-
-
-@lru_cache(maxsize=8)
-def _load_shard_cached(path: str) -> np.ndarray:
-    """Executor-local shard-bitmap cache. Safe to key on path alone: a
-    generation file's content never changes after its atomic rename — any
-    content change gets a new generation and hence a new path. Capped so a
-    long-lived python worker never holds more than a few shards."""
-    return np.fromfile(path, dtype=np.uint8)
-
-
-def _load_shard_gen(dir_: str, shard: int, gen: int) -> np.ndarray:
-    """Load a touched shard's current generation. A missing file here is
-    NEVER 'empty' — the meta says this shard holds keys — so raise instead
-    of silently classifying seen URLs as definite-new (which would bypass
-    the exact anti-join backstop entirely)."""
-    path = _shard_file(dir_, shard, gen)
-    try:
-        if not os.path.exists(path):  # one cheap stat: a cached bitmap must
-            raise FileNotFoundError(path)  # not mask on-disk storage loss
-        return _load_shard_cached(path)
-    except FileNotFoundError:
-        raise RuntimeError(
-            f"bloom shard {shard} generation {gen} missing at {path}: the "
-            "shard dir lost state (non-shared storage? partial wipe?). "
-            "Re-seed the bloom from the full seen set before continuing."
-        ) from None
-
-
-class ShardedBloom:
-    """Bloom-per-bucket URL-seen (SCALE_DESIGN.md D3; reference set-membership
-    at planetary scale: fetcher.ts:497-505).
-
-    The key space is sharded by ``pmod(xxhash64(url_canon, 2), P)`` — a hash
-    independent of the in-shard double-hash pair — and each shard owns a
-    bitmap sized for ``expected_total / P``. Why: at 10^10 keys a single
-    1%-fpp bitmap is ~12 GB (unbroadcastable, un-OR-able on one driver);
-    1024 shards of ~12 MB are built, merged, persisted and probed
-    INDEPENDENTLY. Probes are routed by the same pmod (repartition on the
-    shard id), so a probe task touches exactly one shard's bitmap — and a
-    shard whose candidates are all bloom-negative contributes zero rows to
-    the exact anti-join backstop, skipping that bucket's join shuffle
-    entirely (bench.py measures the skipped fraction).
-
-    Two shard lifecycles:
-
-    - ``dir=None`` (in-memory): shards live in a driver dict and ship in one
-      broadcast — fine while P·m fits comfortably on the driver (tests,
-      small crawls), and the equivalence baseline.
-    - ``dir=...`` (file-backed — the 10^10-key path): one file per shard
-      under ``dir`` (shared storage on a cluster). ``update()`` routes the
-      KEY ROWS by shard and each task OR-merges its shards straight into
-      their files (read-OR-write + atomic rename; task retries are
-      idempotent because OR is); the driver holds ZERO bitmaps and receives
-      only a tiny (shard, merged) summary. ``split()`` probe tasks open only
-      the shard files their routed partition needs (executor-local cached
-      read) — nothing proportional to P·m ever sits on the driver or in a
-      broadcast.
-
-    Functionally identical output in both modes and to
-    :class:`IncrementalBloom` (test-asserted): same double-hash positions
-    within a shard, same exact left-anti backstop, so false positives can
-    never drop a URL."""
-
-    ROUTE_SEED = 2  # xxhash64(col, 2): independent of _h1/_h2 seeds (0, 1)
-
-    def __init__(
-        self,
-        expected_total: int,
-        n_shards: int = 16,
-        fpp: float = 0.01,
-        dir: str | None = None,
-        fresh: bool = False,
-    ):
-        self.n_shards = max(1, n_shards)
-        self.m, self.k = _bloom_params(
-            max(1, expected_total // self.n_shards), fpp
-        )
-        self.dir = dir
-        if dir is None:
-            self.shards: dict[int, np.ndarray] | None = {
-                s: np.zeros(self.m // 8, dtype=np.uint8) for s in range(self.n_shards)
-            }
-            self._gens: dict[int, int] = {}
-        else:
-            # file-backed: no driver-resident bitmaps at all. _meta.json
-            # carries the layout AND the per-shard generation counter: a
-            # shard's current bitmap lives at shard_SSSSS.gGGGGGG.bloom, so
-            # any content change changes the filename (executor caches can
-            # never go stale) and gens doubles as the touched-shard set
-            # (missing file for a recorded generation = storage loss, not
-            # 'never routed' — probes raise instead of leaking duplicates).
-            self.shards = None
-            layout = {
-                "m": self.m,
-                "k": self.k,
-                "n_shards": self.n_shards,
-                "route_seed": self.ROUTE_SEED,
-            }
-            meta_path = os.path.join(dir, "_meta.json")
-            existing = None
-            if not fresh and os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    existing = json.load(f)
-            if existing is None or existing.get("layout") != layout:
-                # incompatible layout (or fresh requested): start empty.
-                # Callers must re-seed from the full seen set — a bloom
-                # MISSING keys would leak duplicates past the prefilter.
-                shutil.rmtree(dir, ignore_errors=True)
-                os.makedirs(dir, exist_ok=True)
-                self._gens = {}
-                self._write_meta()
-            else:
-                if os.path.exists(os.path.join(dir, "_update.intent")):
-                    # an update() crashed after executors wrote g+1 shard
-                    # files but before the meta commit: meta still says g,
-                    # so that update's keys are silently absent from every
-                    # probe. Serving would leak duplicates past the
-                    # prefilter — refuse; the caller must re-seed
-                    # (fresh=True) or re-run the exact same update from the
-                    # surviving process (idempotent: same inputs OR into
-                    # the same g+1 paths).
-                    raise RuntimeError(
-                        f"ShardedBloom dir {dir!r} has an uncommitted update "
-                        "(_update.intent present): its keys are missing from "
-                        "the committed generation — re-seed with fresh=True"
-                    )
-                self._gens = {int(s): g for s, g in existing["gens"].items()}
-
-    def _write_meta(self) -> None:
-        meta = {
-            "layout": {
-                "m": self.m,
-                "k": self.k,
-                "n_shards": self.n_shards,
-                "route_seed": self.ROUTE_SEED,
-            },
-            "gens": {str(s): g for s, g in sorted(self._gens.items())},
-        }
-        path = os.path.join(self.dir, "_meta.json")
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, path)
-
-    def _with_route(self, df: DataFrame, col: str) -> DataFrame:
-        return _with_hashes(df, col).withColumn(
-            "_shard", F.pmod(F.xxhash64(F.col(col), F.lit(self.ROUTE_SEED)),
-                             F.lit(self.n_shards)).cast("int")
-        )
-
-    def update(self, df: DataFrame, col: str = "url_canon") -> None:
-        """OR-merge ``df[col]`` into the per-shard bitmaps.
-
-        In-memory: executors emit (shard, partial-bitmap) rows — each partial
-        one shard's slice — and the driver ORs them into its dict.
-        File-backed: the key rows are routed by shard first (3 int64 columns
-        shuffle — never bitmaps), then each task builds its shards' bitmaps
-        and merges them straight into the shard files; the driver never sees
-        a bitmap."""
-        m, k = self.m, self.k
-        if self.dir is not None:
-            dir_ = self.dir
-            gens = dict(self._gens)  # driver snapshot shipped in the closure
-            schema = StructType([StructField("shard", IntegerType())])
-
-            def build_merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                acc: dict[int, np.ndarray] = {}
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    for shard, grp in pdf.groupby("_shard"):
-                        bits = acc.setdefault(
-                            int(shard), np.zeros(m // 8, dtype=np.uint8)
-                        )
-                        pos = _positions(
-                            grp["_h1"].to_numpy(), grp["_h2"].to_numpy(), k, m
-                        ).ravel()
-                        np.bitwise_or.at(
-                            bits, pos >> np.uint64(3),
-                            (1 << (pos & np.uint64(7))).astype(np.uint8),
-                        )
-                for s, bits in acc.items():
-                    g = gens.get(s, 0)
-                    if g > 0:
-                        bits = bits | _load_shard_gen(dir_, s, g)
-                    # write generation g+1 under a NEW name: retries are
-                    # idempotent (same inputs → same OR result, same path)
-                    # and no reader of generation g can ever see a torn or
-                    # half-merged bitmap
-                    path = _shard_file(dir_, s, g + 1)
-                    tmp = f"{path}.tmp.{os.getpid()}"
-                    bits.tofile(tmp)
-                    os.replace(tmp, path)
-                if acc:
-                    yield pd.DataFrame({"shard": list(acc)})
-
-            # journal the update BEFORE the Spark job: if the driver dies
-            # between the executors' g+1 shard writes and the meta commit,
-            # a later process attaching to this dir sees the intent marker
-            # and refuses to serve a bloom that is silently missing keys
-            # (__init__ raises). Removed only after the atomic meta commit.
-            intent = os.path.join(dir_, "_update.intent")
-            tmp = f"{intent}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump({"pid": os.getpid(), "gens_before": dict(self._gens)}, f)
-            os.replace(tmp, intent)
-            touched = [
-                r.shard
-                for r in self._with_route(df.select(col), col)
-                .select("_shard", "_h1", "_h2")
-                .repartition(self.n_shards, "_shard")
-                .mapInPandas(build_merge, schema)
-                .collect()  # tiny: one int row per touched shard
-            ]
-            old = {s: self._gens.get(s, 0) for s in touched}
-            for s in touched:
-                self._gens[s] = old[s] + 1
-            self._write_meta()  # commit the new generations atomically
-            os.remove(intent)  # journal closed: update fully committed
-            for s, g in old.items():  # retire superseded generation files
-                if g > 0:
-                    try:
-                        os.remove(_shard_file(dir_, s, g))
-                    except FileNotFoundError:
-                        pass
-            return
-
-        schema = StructType(
-            [StructField("shard", IntegerType()), StructField("bits", BinaryType())]
-        )
-
-        def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: dict[int, np.ndarray] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for shard, grp in pdf.groupby("_shard"):
-                    bits = acc.setdefault(int(shard), np.zeros(m // 8, dtype=np.uint8))
-                    pos = _positions(
-                        grp["_h1"].to_numpy(), grp["_h2"].to_numpy(), k, m
-                    ).ravel()
-                    np.bitwise_or.at(
-                        bits, pos >> np.uint64(3),
-                        (1 << (pos & np.uint64(7))).astype(np.uint8),
-                    )
-            if acc:
-                yield pd.DataFrame(
-                    {"shard": list(acc), "bits": [b.tobytes() for b in acc.values()]}
-                )
-
-        partials = (
-            self._with_route(df.select(col), col)
-            .select("_shard", "_h1", "_h2")
-            .mapInPandas(partial, schema)
-        )
-        for row in partials.collect():
-            self.shards[row.shard] |= np.frombuffer(row.bits, dtype=np.uint8)
-
-    def split(
-        self, candidates: DataFrame, col: str = "url_canon"
-    ) -> tuple[DataFrame, DataFrame]:
-        """→ (definite_new, needs_check): probes routed by shard id so each
-        Arrow batch touches one shard's bitmap. File-backed shards are read
-        executor-locally (cached by generation-unique path — immutable
-        content, no mtime trust); in-memory shards travel in one broadcast
-        dict."""
-        spark = candidates.sparkSession
-        m, k = self.m, self.k
-
-        if self.dir is not None:
-            dir_ = self.dir
-            gens = dict(self._gens)  # driver snapshot shipped in the closure
-
-            @F.pandas_udf(BooleanType())
-            def maybe_seen(h1: pd.Series, h2: pd.Series, shard: pd.Series) -> pd.Series:
-                out = np.zeros(len(h1), dtype=bool)
-                h1v, h2v = h1.to_numpy(), h2.to_numpy()
-                for s in pd.unique(shard):
-                    sel = (shard == s).to_numpy()
-                    g = gens.get(int(s), 0)
-                    if g == 0:
-                        continue  # never touched per meta → all definite-new
-                    # recorded-but-missing raises inside (storage loss must
-                    # not silently become definite_new)
-                    bits = _load_shard_gen(dir_, int(s), g)
-                    pos = _positions(h1v[sel], h2v[sel], k, m)
-                    hit = (
-                        bits[pos >> np.uint64(3)]
-                        & (1 << (pos & np.uint64(7))).astype(np.uint8)
-                    ) != 0
-                    out[sel] = hit.all(axis=0)
-                return pd.Series(out)
-
-        else:
-            bc = spark.sparkContext.broadcast(
-                {s: b.tobytes() for s, b in self.shards.items()}
-            )
-
-            @F.pandas_udf(BooleanType())
-            def maybe_seen(h1: pd.Series, h2: pd.Series, shard: pd.Series) -> pd.Series:
-                out = np.zeros(len(h1), dtype=bool)
-                h1v, h2v = h1.to_numpy(), h2.to_numpy()
-                for s in pd.unique(shard):
-                    sel = (shard == s).to_numpy()
-                    bits = np.frombuffer(bc.value[int(s)], dtype=np.uint8)
-                    pos = _positions(h1v[sel], h2v[sel], k, m)
-                    hit = (
-                        bits[pos >> np.uint64(3)]
-                        & (1 << (pos & np.uint64(7))).astype(np.uint8)
-                    ) != 0
-                    out[sel] = hit.all(axis=0)
-                return pd.Series(out)
-
-        routed = self._with_route(candidates, col).repartition(
-            self.n_shards, "_shard"
-        )
-        with_flag = routed.withColumn("_maybe", maybe_seen("_h1", "_h2", "_shard"))
-        definite_new = with_flag.filter(~F.col("_maybe")).drop(
-            "_h1", "_h2", "_shard", "_maybe"
-        )
-        needs_check = with_flag.filter(F.col("_maybe")).drop(
-            "_h1", "_h2", "_shard", "_maybe"
-        )
-        return definite_new, needs_check
-
-    def prefiltered_anti_join(
-        self, candidates: DataFrame, seen: DataFrame, col: str = "url_canon"
-    ) -> DataFrame:
-        """candidates ∖ seen: Bloom-negative rows pass immediately; only
-        Bloom-positive rows go through the exact left_anti backstop."""
-        definite_new, needs_check = self.split(candidates, col)
-        checked = needs_check.join(seen.select(col), col, "left_anti")
-        return definite_new.unionByName(checked)
-
-
-def build_bloom(seen: DataFrame, col: str, fpp: float = 0.01) -> tuple[bytes, int, int]:
-    """→ (bitmap bytes, m_bits, k). One distributed pass + driver OR-merge."""
-    n = seen.count()
-    m, k = _bloom_params(n, fpp)
-
-    schema = StructType([StructField("bits", BinaryType())])
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        any_rows = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            any_rows = True
-            pos = _positions(
-                pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), k, m
-            ).ravel()
-            np.bitwise_or.at(bits, pos >> np.uint64(3), (1 << (pos & np.uint64(7))).astype(np.uint8))
-        if any_rows:
-            yield pd.DataFrame({"bits": [bits.tobytes()]})
-
-    partials = _with_hashes(seen.select(col), col).select("_h1", "_h2").mapInPandas(
-        partial, schema
-    )
-    merged = np.zeros(m // 8, dtype=np.uint8)
-    for row in partials.collect():
-        merged |= np.frombuffer(row.bits, dtype=np.uint8)
-    return merged.tobytes(), m, k
-
-
-def anti_join_with_bloom(
-    candidates: DataFrame,
-    seen: DataFrame,
-    col: str = "url_canon",
-    fpp: float = 0.01,
-) -> DataFrame:
-    """candidates ∖ seen (on ``col``), Bloom-accelerated, exactly correct."""
-    spark = candidates.sparkSession
-    bitmap, m, k = build_bloom(seen, col, fpp)
-    bc = spark.sparkContext.broadcast(bitmap)
-
-    @F.pandas_udf(BooleanType())
-    def maybe_seen(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        pos = _positions(h1.to_numpy(), h2.to_numpy(), k, m)
-        hit = (bits[pos >> np.uint64(3)] & (1 << (pos & np.uint64(7))).astype(np.uint8)) != 0
-        return pd.Series(hit.all(axis=0))
-
-    with_flag = _with_hashes(candidates, col).withColumn(
-        "_maybe", maybe_seen("_h1", "_h2")
-    )
-    definite_new = with_flag.filter(~F.col("_maybe")).drop("_h1", "_h2", "_maybe")
-    needs_check = with_flag.filter(F.col("_maybe")).drop("_h1", "_h2", "_maybe")
-    checked = needs_check.join(seen.select(col), col, "left_anti")
-    return definite_new.unionByName(checked)
 
 
 def exact_anti_join(candidates: DataFrame, seen: DataFrame, col: str = "url_canon") -> DataFrame:
-    """Plain left_anti — used when seen is small or as a reference path."""
+    """candidates ∖ seen on ``col`` — a plain ``left_anti`` join."""
     return candidates.join(seen.select(col), col, "left_anti")

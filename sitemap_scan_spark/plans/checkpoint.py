@@ -127,34 +127,6 @@ class RoundStore:
         os.rename(tmp, os.path.join(d, "_manifest.json"))
         return manifest
 
-    def commit_round(
-        self,
-        rnd: int,
-        tables: dict[str, DataFrame],
-        counters: dict,
-    ) -> dict:
-        """Write tables, then the manifest (the atomic commit marker)."""
-        d = self._dir(rnd)
-        if os.path.exists(d):  # partial leftovers from a killed run
-            shutil.rmtree(d)
-        lineage: dict[str, dict] = {}
-        for name, df in tables.items():
-            path = os.path.join(d, name)
-            df.write.mode("overwrite").parquet(path)
-            lineage[name] = self.table_lineage(rnd, name)
-        manifest = {
-            "round": rnd,
-            "parent_round": rnd - 1 if rnd > 0 else None,
-            "committed_at": time.time(),
-            "counters": counters,
-            "lineage": lineage,
-        }
-        tmp = os.path.join(d, "_manifest.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.rename(tmp, os.path.join(d, "_manifest.json"))
-        return manifest
-
     def read_manifest(self, rnd: int) -> dict:
         with open(os.path.join(self._dir(rnd), "_manifest.json")) as f:
             return json.load(f)

@@ -2,26 +2,26 @@
 
 Distributed implementation of CRAWL_SPEC.md (the reference's
 ``performSiteBackup`` lifecycle, SURVEY §3.1, /root/reference/src/backup/
-fetcher.ts:101-294) where every round is ONE DataFrame job:
+fetcher.ts:101-294) where every round is a short chain of DataFrame writes:
 
-    pending ─robots gate (broadcast dim)─► eligible
-            ─two-phase salted window dequeue + parallel global rank─► taken
+    pending ─sleeping-hosts gate (wall-clock politeness dim)─► eligible
+            ─per-host window (map-side group limit) + top-k cap─► taken
             ─broadcast fetch join vs pages─► fetched/miss/redirect
             ─JVM regex parse (text/links/redirect)─► fetch_log delta
             ─vectorized resolve+canonicalize → exclude rlike → dedup─►
-            ─(adaptive Bloom-prefiltered) anti-join vs frontier─► inserts
-            ─frontier snapshot + deltas committed via RoundStore─► next round
+            ─exact anti-join vs the seen keys → robots gate─► inserts
+            ─deltas (+ a snapshot every K rounds) via RoundStore─► next round
 
 Scale notes (10^10 frontier, 100 TB pages):
 - WRITE-FIRST: each stage materializes its delta once and re-reads it (no
-  heap-resident checkpoints, lineage truncated every round; counters come
-  from parquet footers, not extra jobs);
+  heap-resident checkpoints, lineage truncated every round); round counters
+  ride the writes as ``Observation`` metrics, not extra jobs;
 - the fetch join broadcasts ``taken`` (≤ round_size) against the pages scan;
   with an Iceberg pages table, bloom-filter column metrics on url prune
   almost all files — locally it's one scan per round;
 - robots rules are a per-host dim — broadcast, never shuffled;
 - parse/extract/dedup keys are JVM whole-stage codegen; Python appears only
-  in Arrow-vectorized canonicalization and the Bloom probe — never per-row.
+  in Arrow-vectorized canonicalization — never per-row.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ import os
 import re
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
@@ -41,7 +41,7 @@ from ..functions.extract import (
     extract_text_col,
 )
 from ..operators.frontier import dequeue
-from ..operators.urlseen import ShardedBloom, exact_anti_join
+from ..operators.urlseen import exact_anti_join
 from ..sources.robots import parse_robots_one
 from ..sources.sitemap import expand_sitemaps
 from .checkpoint import RoundStore
@@ -59,16 +59,12 @@ class CrawlEngine:
         pages: DataFrame,
         cfg: CrawlConfig,
         workdir: str,
-        use_bloom: bool = True,
         refresh_pages: bool = False,
     ):
         self.spark = spark
         self.cfg = cfg
         self.workdir = workdir
         self.store = RoundStore(os.path.join(workdir, "rounds"))
-        self.use_bloom = use_bloom
-        self._bloom: ShardedBloom | None = None
-        self._bloom_decision: dict | None = None  # measured gray-zone crossover
         # O(round)-per-round caches (round 3; SCALE_DESIGN.md). The old
         # design re-shuffled + re-persisted the FULL latest-wins frontier
         # view every round — O(frontier) work per round that dominates at
@@ -81,17 +77,17 @@ class CrawlEngine:
         #  - seen-keys TAIL: the insert deltas since the base (≤
         #    compact_every round-sized parquet reads), anti-joined after
         #    the base (cands ∖ (A∪B) = (cands ∖ A) ∖ B);
-        #  - PENDING cache, split BASE + TAIL (round 4): the base carries a
-        #    materialized _salt column and is hash-partitioned + persisted
-        #    on (host, _salt) — the dequeue's phase-1 window ranks it IN
-        #    PLACE (zero Exchange; the last per-round O(pending) shuffle is
-        #    gone). Advanced each round by a broadcast anti-join of the
-        #    round's taken keys (narrow — BroadcastHashJoin preserves the
-        #    streamed side's partitioning). The tail holds the pending
-        #    inserts since the last rebase (round-sized); both are rebased
-        #    from the disk snapshot at every compaction, so cache lineage
-        #    never exceeds frontier_compact_every joins (ADVICE round 3:
-        #    unbounded plan growth risked O(R²) analysis + driver stack
+        #  - PENDING cache, split BASE + TAIL: the base is hash-partitioned
+        #    on url_canon and persisted — a hot host spreads over every
+        #    partition, and the dequeue's map-side per-host group limit
+        #    prunes it to ≤ base_host_budget rows per host per partition
+        #    before the per-host shuffle. Advanced each round by a broadcast
+        #    anti-join of the round's taken keys (narrow — BroadcastHashJoin
+        #    preserves the streamed side's partitioning). The tail holds the
+        #    pending inserts since the last rebase (round-sized); both are
+        #    rebased from the disk snapshot at every compaction, so cache
+        #    lineage never exceeds frontier_compact_every joins (ADVICE round
+        #    3: unbounded plan growth risked O(R²) analysis + driver stack
         #    overflow on very long crawls).
         self._pending_base: DataFrame | None = None
         self._pending_tail: DataFrame | None = None
@@ -350,12 +346,26 @@ class CrawlEngine:
             .select("url_canon", "depth", "priority"),
             rnd=0,
         )
-        frontier = frontier.localCheckpoint(eager=True)
-        n = frontier.count()
-        n_blocked = frontier.filter(F.col("status") == "robots_blocked").count()
-        self.store.commit_round(
+        # committed like every crawl round: the counters ride the snapshot
+        # write as observed metrics, the manifest lands last
+        obs = Observation()
+        self.store.begin_round(0)
+        self.store.write_table(
+            self.spark,
             0,
-            {"frontier": frontier},
+            "frontier",
+            frontier.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("status") == "robots_blocked").cast("long")).alias(
+                    "n_blocked"
+                ),
+            ),
+        )
+        n = int(obs.get["n"] or 0)
+        n_blocked = int(obs.get["n_blocked"] or 0)
+        self.store.commit_manifest(
+            0,
             {
                 "frontier_size": n,
                 "n_blocked": n_blocked,
@@ -455,10 +465,11 @@ class CrawlEngine:
         """The PENDING frontier rows as of round ``rnd`` — the dequeue
         input — as (BASE, TAIL-or-None).
 
-        BASE carries a materialized ``_salt`` column, hash-partitioned +
-        persisted on (host, _salt): the dequeue's phase-1 window ranks it
-        with ZERO Exchange (plan-asserted in tests), so the per-round cost
-        of the O(pending) cache is one in-memory scan, never a shuffle.
+        BASE is hash-partitioned on url_canon and persisted: the dequeue's
+        map-side per-host group limit prunes it in place before the
+        per-host shuffle (plan-asserted in tests), so the per-round cost of
+        the O(pending) cache is one in-memory scan plus a shuffle of at most
+        base_host_budget rows per host per partition.
         TAIL is the pending inserts since the last rebase (≤ compact_every
         round-sized sets). Both advance narrowly per round via
         :meth:`_advance_pending`; cold path (process start, post-refresh,
@@ -482,15 +493,9 @@ class CrawlEngine:
         caches are dropped BEFORE the new base materializes, so the
         frontier is never memory-resident twice (the transient doubling
         OOMed a 16-thread local JVM at 6.4M pending rows on an 8g heap)."""
-        from ..operators.frontier import SALT_COL, salt_col
-
         self._drop_pending_caches()
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        base = (
-            pending.withColumn(SALT_COL, salt_col(self.cfg.salt_buckets))
-            .repartition(n, "host", SALT_COL)
-            .persist()
-        )
+        base = pending.repartition(n, "url_canon").persist()
         base.count()
         self._pending_base = base
         self._pending_tail = None
@@ -511,28 +516,24 @@ class CrawlEngine:
 
         Both deltas are round-sized and disk-backed. The base side drops
         its taken rows via a BROADCAST anti-join — narrow, so the persisted
-        (host, _salt) partitioning survives and the next dequeue's phase-1
-        window still runs Exchange-free. New pending rows go to the TAIL
-        (a union onto the base would destroy its reported partitioning);
-        the tail stays round-sized because compaction folds it back into
-        the base. Rounds too large to broadcast (cap derived from the
-        driver heap, :meth:`_broadcast_key_cap`) invalidate the cache
-        instead — a shuffle anti-join would shuffle the base AND lose its
-        partitioning, strictly worse than the cold rebuild it falls back
-        to."""
+        url_canon partitioning survives into the next dequeue. New pending
+        rows go to the TAIL (a union onto the base would destroy its
+        reported partitioning); the tail stays round-sized because
+        compaction folds it back into the base. Rounds too large to
+        broadcast (cap derived from the driver heap,
+        :meth:`_broadcast_key_cap`) invalidate the cache instead — a shuffle
+        anti-join would shuffle the base AND lose its partitioning, strictly
+        worse than the cold rebuild it falls back to."""
         if self._pending_base is None or self._pending_round != rnd - 1:
             return  # no valid parent — next _pending_parts() rebuilds cold
         if n_taken > self._broadcast_key_cap():
             self._drop_pending_caches()
             return
-        from ..operators.frontier import SALT_COL, salt_col
-
         keys = F.broadcast(taken_keys.select("url_canon"))
         base_nxt = self._pending_base.join(keys, "url_canon", "left_anti").persist()
-        new_pending = new_rows.filter(F.col("status") == "pending").withColumn(
-            SALT_COL, salt_col(self.cfg.salt_buckets)
+        tail_nxt = new_rows.filter(F.col("status") == "pending").select(
+            *self._pending_base.columns
         )
-        tail_nxt = new_pending.select(*self._pending_base.columns)
         if self._pending_tail is not None:
             tail_nxt = (
                 self._pending_tail.join(keys, "url_canon", "left_anti")
@@ -760,11 +761,6 @@ class CrawlEngine:
                     "frontier_size": self.store.table_rows(new_round, "frontier"),
                 },
             )
-            if self._bloom is not None and n_new > 0:
-                # feed exactly this refresh's insert delta (blocked included —
-                # they are url_seen), never re-filtered from the merged
-                # frontier where old round-`latest` rows would leak in
-                self._bloom.update(new_rows.select("url_canon"))
 
         state["root_hashes"] = {**stored, **current}
         self._save_discovery_state(state)
@@ -775,178 +771,10 @@ class CrawlEngine:
             "n_new": n_new,
         }
 
-    # ------------------------------------------------------------ url-seen
-    def _ensure_bloom(self, seen_base: DataFrame, seen_tail: DataFrame | None) -> None:
-        """Seed the URL-seen filter once per process (fresh run OR resume):
-        one pass over the seen-key set; afterwards it is OR-updated with
-        each round's insert delta only."""
-        if self._bloom is not None:
-            return
-        est = max(self.pages_canon.count() * 2, 1 << 16)
-        # file-backed shard lifecycle: bitmaps live one-file-per-shard under
-        # the workdir; the driver holds none of them (fresh=True — the
-        # full seed below rebuilds state, so stale files from a prior
-        # process must not linger)
-        self._bloom = ShardedBloom(
-            expected_total=est,
-            n_shards=self.cfg.bloom_shards,
-            dir=os.path.join(self.store.root, "_urlseen_bloom"),
-            fresh=True,
-        )
-        seen = seen_base if seen_tail is None else seen_base.unionByName(seen_tail)
-        self._bloom.update(seen)
-
-    def _decide_urlseen_mode(
-        self,
-        frontier_size: int,
-        cands: DataFrame,
-        seen_base: DataFrame,
-        seen_tail: DataFrame | None,
-    ) -> tuple[bool, dict | None, DataFrame]:
-        """Bloom pays for itself once the frontier outgrows what a plain
-        shuffle anti-join handles cheaply; below that its extra jobs/round
-        are pure overhead (SURVEY §4.3 — the exact anti-join is always the
-        correctness backstop either way, so BOTH modes give identical
-        output and the flip is purely a plan choice).
-
-        Far from ``cfg.bloom_min_frontier`` the static decision stands. In
-        the gray zone [min/2, 2·min] the crossover is MEASURED on this
-        round's real inputs — both paths timed once, result cached on the
-        engine until the frontier doubles/halves — and the measurement is
-        recorded in the round's manifest (``bloom_crossover``), so the
-        threshold is evidence in the crawl's own lineage, not a guess.
-
-        Returns (use_bloom, measurement-or-None, cands) — when a
-        measurement ran, the returned ``cands`` is the PERSISTED handle the
-        measurement already computed; the caller reuses it for the real
-        write (the candidate pipeline is never recomputed) and unpersists
-        it after the insert delta lands on disk."""
-        if not self.use_bloom:
-            return False, None, cands
-        lo, hi = self.cfg.bloom_min_frontier // 2, self.cfg.bloom_min_frontier * 2
-        if frontier_size < lo:
-            return False, None, cands
-        if frontier_size > hi:
-            return True, None, cands
-        d = self._bloom_decision
-        if d is not None and d["frontier_size"] / 2 <= frontier_size <= d["frontier_size"] * 2:
-            return d["use_bloom"], None, cands
-        cands_m = cands.persist()
-        try:
-            cands_m.count()  # materialize BEFORE either timer: otherwise the
-            # first-timed path (exact) also pays the full candidate-pipeline
-            # compute while the second reads from cache — a systematic bias
-            # toward bloom that could flip the recorded crossover the wrong way
-            t0 = time.time()
-            n_exact = self._anti_seen(cands_m, seen_base, seen_tail).count()
-            secs_exact = time.time() - t0
-            # seeding amortizes across rounds — untimed
-            self._ensure_bloom(seen_base, seen_tail)
-            t0 = time.time()
-            definite_new, needs_check = self._bloom.split(cands_m)
-            n_bloom = (
-                definite_new.unionByName(
-                    self._anti_seen(needs_check, seen_base, seen_tail)
-                ).count()
-            )
-            secs_bloom = time.time() - t0
-            if n_exact != n_bloom:  # both paths are exact by construction — a
-                # mismatch means the bloom state is corrupt (must survive -O)
-                raise RuntimeError(
-                    f"urlseen self-check failed: exact={n_exact} bloom={n_bloom}"
-                )
-        except BaseException:
-            # the caller only unpersists the handle it receives after the
-            # insert delta lands — on a failed measurement nobody would, so
-            # release the cached candidate set before propagating
-            cands_m.unpersist()
-            raise
-        d = {
-            "frontier_size": frontier_size,
-            "secs_exact": round(secs_exact, 3),
-            "secs_bloom": round(secs_bloom, 3),
-            "use_bloom": secs_bloom < secs_exact,
-        }
-        self._bloom_decision = d
-        return d["use_bloom"], d, cands_m
-
     # ----------------------------------------------------------------- round
-    def run_round(self, rnd: int) -> dict:
-        """One crawl round, WRITE-FIRST: each stage materializes its delta to
-        the round directory once and continues from the re-read — ~6 Spark
-        jobs per round, no heap-resident checkpoints, counters from parquet
-        footers. The manifest commit (last) makes the round visible."""
-        cfg = self.cfg
-        t0 = time.time()
-        _tm = [time.time()]
-        _timing = os.environ.get("SSC_TIMING") == "1"
-
-        def _mark(label: str) -> None:
-            if _timing:
-                now = time.time()
-                print(f"[timing r{rnd}] {label}: {now - _tm[0]:.2f}s", flush=True)
-                _tm[0] = now
-
-        store = self.store
-        store.begin_round(rnd)
-        # 1. robots gating happened at insert (status + crawl_delay live in
-        # the frontier row), so every pending row is eligible by construction
-        # — except hosts sleeping off a crawl_delay > round_period (CRAWL_SPEC
-        # Round 3a: wall-clock politeness), gated by the tiny host_state dim
-        pend_base, pend_tail = self._pending_parts(rnd - 1)
-        eligible_parts = [pend_base] + ([pend_tail] if pend_tail is not None else [])
-        period = cfg.round_period()
-        wallclock = self._wallclock_politeness_on()
-        prev_host_state = self._host_state(rnd - 1) if wallclock else None
-        big_sleep_round = self._sleeping_oversized_round if wallclock else None
-        sleeping_now = {
-            h: nr for h, nr in (prev_host_state or {}).items() if nr > rnd
-        }
-        if big_sleep_round is not None:
-            # distributed fallback (SLEEP_DICT_CAP exceeded — logged in
-            # _host_state): the dim is joined as a table; the base part
-            # loses its cached partitioning for this round, which is the
-            # graceful degradation the driver-dict path replaced
-            sleeping_df = (
-                store.read_table(self.spark, big_sleep_round, "host_state")
-                .filter(F.col("next_eligible_round") > rnd)
-                .select("host")
-            )
-            eligible_parts = [
-                p.join(sleeping_df, "host", "left_anti") for p in eligible_parts
-            ]
-        elif sleeping_now:
-            sleeping = self.spark.createDataFrame(
-                [(h,) for h in sorted(sleeping_now)], "host string"
-            )
-            # broadcast anti over a LocalRelation — narrow (no job to
-            # materialize the build side), so the base part keeps its
-            # (host, _salt) partitioning into the phase-1 window
-            eligible_parts = [
-                p.join(F.broadcast(sleeping), "host", "left_anti")
-                for p in eligible_parts
-            ]
-
-        # 2-3. politeness dequeue (two-phase salted window + TakeOrdered
-        # cap). The dequeue's range-buckets stay cached, so ``taken`` is
-        # cheap to re-evaluate for both sides of the fetch join; the crawl
-        # order is persisted as columns OF the fetch_log delta (one write
-        # per round for dequeue+fetch instead of two — the rank/host/delay
-        # columns are round-sized, and manifest-last keeps the commit
-        # atomic either way).
-        prev_counters = store.read_manifest(rnd - 1)["counters"]
-        prev_pending = prev_counters.get("n_pending_after")
-        dq = dequeue(
-            eligible_parts,
-            cfg.base_host_budget,
-            cfg.round_size,
-            cfg.salt_buckets,
-            period,
-            small_input=(
-                prev_pending is not None
-                and prev_pending <= cfg.dequeue_small_max_pending
-            ),
-        )
+    def _fetch(self, rnd: int, dq: DataFrame) -> tuple[DataFrame, dict]:
+        """Fetch + parse the dequeued rows and write them as round ``rnd``'s
+        fetch_log delta. Returns (the re-read delta, its observed counters)."""
         taken = dq.select(
             F.lit(rnd).alias("round"),
             "rank",
@@ -997,8 +825,6 @@ class CrawlEngine:
         # round counters ride the WRITE job as observed metrics — zero extra
         # passes (at 10^8-URL cluster rounds a per-round status-column rescan
         # is real money; Observation aggregates map-side during the write)
-        from pyspark.sql import Observation
-
         obs_fetch = Observation()
         to_write = enriched.select(
             "round",
@@ -1019,10 +845,80 @@ class CrawlEngine:
             F.sum((F.col("status") == "miss").cast("long")).alias("n_miss"),
             F.sum((F.col("status") == "redirect").cast("long")).alias("n_redirect"),
         )
-        fetch_log = store.write_table(self.spark, rnd, "fetch_log", to_write)
-        fetch_counts = obs_fetch.get  # populated by the write job
-        if hasattr(dq, "_ssc_persisted"):
-            dq._ssc_persisted.unpersist()
+        fetch_log = self.store.write_table(self.spark, rnd, "fetch_log", to_write)
+        return fetch_log, obs_fetch.get  # populated by the write job
+
+    def run_round(self, rnd: int) -> dict:
+        """One crawl round, WRITE-FIRST: each stage materializes its delta to
+        the round directory once and continues from the re-read — no
+        heap-resident checkpoints, counters observed on the writes. The
+        manifest commit (last) makes the round visible."""
+        cfg = self.cfg
+        t0 = time.time()
+        _tm = [time.time()]
+        _timing = os.environ.get("SSC_TIMING") == "1"
+
+        def _mark(label: str) -> None:
+            if _timing:
+                now = time.time()
+                print(f"[timing r{rnd}] {label}: {now - _tm[0]:.2f}s", flush=True)
+                _tm[0] = now
+
+        store = self.store
+        store.begin_round(rnd)
+        # 1. robots gating happened at insert (status + crawl_delay live in
+        # the frontier row), so every pending row is eligible by construction
+        # — except hosts sleeping off a crawl_delay > round_period (CRAWL_SPEC
+        # Round 3a: wall-clock politeness), gated by the tiny host_state dim
+        pend_base, pend_tail = self._pending_parts(rnd - 1)
+        eligible_parts = [pend_base] + ([pend_tail] if pend_tail is not None else [])
+        period = cfg.round_period()
+        wallclock = self._wallclock_politeness_on()
+        prev_host_state = self._host_state(rnd - 1) if wallclock else None
+        big_sleep_round = self._sleeping_oversized_round if wallclock else None
+        sleeping_now = {
+            h: nr for h, nr in (prev_host_state or {}).items() if nr > rnd
+        }
+        if big_sleep_round is not None:
+            # distributed fallback (SLEEP_DICT_CAP exceeded — logged in
+            # _host_state): the dim is joined as a table; the base part
+            # loses its cached partitioning for this round, which is the
+            # graceful degradation the driver-dict path replaced
+            sleeping_df = (
+                store.read_table(self.spark, big_sleep_round, "host_state")
+                .filter(F.col("next_eligible_round") > rnd)
+                .select("host")
+            )
+            eligible_parts = [
+                p.join(sleeping_df, "host", "left_anti") for p in eligible_parts
+            ]
+        elif sleeping_now:
+            sleeping = self.spark.createDataFrame(
+                [(h,) for h in sorted(sleeping_now)], "host string"
+            )
+            # broadcast anti over a LocalRelation — narrow (no job to
+            # materialize the build side), so the base part keeps its
+            # url_canon partitioning into the dequeue's map-side group limit
+            eligible_parts = [
+                p.join(F.broadcast(sleeping), "host", "left_anti")
+                for p in eligible_parts
+            ]
+
+        # 2-3. politeness dequeue: per-host window (map-side group limit
+        # before the per-host shuffle) + top-k cap. The ≤ round_size taken
+        # rows stay persisted until the fetch_log write has consumed them
+        # (the fetch join reads them twice), and are released on every exit
+        # path. The crawl order is persisted as columns OF the fetch_log
+        # delta (one write per round for dequeue+fetch instead of two — the
+        # rank/host/delay columns are round-sized, and manifest-last keeps
+        # the commit atomic either way).
+        prev_counters = store.read_manifest(rnd - 1)["counters"]
+        prev_pending = prev_counters["n_pending_after"]
+        dq = dequeue(eligible_parts, cfg.base_host_budget, cfg.round_size, period)
+        try:
+            fetch_log, fetch_counts = self._fetch(rnd, dq)
+        finally:
+            dq.unpersist()
         if wallclock and big_sleep_round is not None:
             # distributed carry-forward twin of the driver-dict path below:
             # still-sleeping rows ∪ this round's hits (nr = rnd +
@@ -1116,8 +1012,8 @@ class CrawlEngine:
         _mark("dequeue+fetch+parse+write fetch_log")
 
         # 5/6. candidate links from the fetch_log delta: explode + redirect
-        # targets, canonicalize, exclude, per-round dedup, Bloom-prefiltered
-        # anti-join vs the whole frontier → this round's inserts
+        # targets, canonicalize, exclude, per-round dedup, exact anti-join
+        # vs the whole frontier → this round's inserts
         links = fetch_log.filter(F.col("status") == "fetched").select(
             F.col("url_canon").alias("base"),
             F.explode("links").alias("raw"),
@@ -1144,49 +1040,14 @@ class CrawlEngine:
             )
             .filter(F.col("depth") <= cfg.max_depth)
         )
-        # Bloom pays for itself once the frontier outgrows what a plain
-        # shuffle anti-join handles cheaply; below the threshold its two
-        # extra jobs/round are pure overhead (SURVEY §4.3 — the exact
-        # anti-join is always the correctness backstop either way).
-        # tracked arithmetically in the manifest (no frontier scan). Every
-        # writer in this repo records it (init_frontier, refresh_discovery,
-        # run_round), so a missing key means a foreign/corrupt store — fail
-        # loudly rather than quietly re-counting (there is no legacy format
-        # to be compatible with; crawl_order()/url_seen() make the same
-        # single-format assumption).
+        # frontier size and pending are tracked arithmetically in the
+        # manifest (no frontier scan). Every writer in this repo records them
+        # (init_frontier, refresh_discovery, run_round), so a missing key
+        # means a foreign/corrupt store — fail loudly rather than quietly
+        # re-counting.
         frontier_size = prev_counters["frontier_size"]
         seen_base, seen_tail = self._seen_parts(rnd - 1)
-        use_bloom_now, bloom_decision, cands = self._decide_urlseen_mode(
-            frontier_size, cands, seen_base, seen_tail
-        )
-        if use_bloom_now:
-            self._ensure_bloom(seen_base, seen_tail)
-            # bloom prefilter + the base/tail exact backstop: the persisted
-            # base side never re-shuffles; only the (small) bloom-positive
-            # set and the round-sized tail move. The definite-new /
-            # checked-new split rides the insert write as an Observation
-            # (zero extra jobs) so the bloom's measured value — how many
-            # inserts skipped the exact join — is evidence in the crawl's
-            # own lineage, not just an offline bench.
-            from pyspark.sql import Observation as _Obs
-
-            definite_new, needs_check = self._bloom.split(cands)
-            obs_bloom = _Obs()
-            fresh = (
-                definite_new.withColumn("_definite", F.lit(True))
-                .unionByName(
-                    self._anti_seen(needs_check, seen_base, seen_tail)
-                    .withColumn("_definite", F.lit(False))
-                )
-                .observe(
-                    obs_bloom,
-                    F.sum(F.col("_definite").cast("long")).alias("n_definite"),
-                    F.sum((~F.col("_definite")).cast("long")).alias("n_checked"),
-                )
-            )
-        else:
-            obs_bloom = None
-            fresh = self._anti_seen(cands, seen_base, seen_tail)
+        fresh = self._anti_seen(cands, seen_base, seen_tail)
         # robots gate AT INSERT — only the (small) fresh set is joined
         # against the rules dim; blocked rows enter the frontier terminally
         obs_ins = Observation()
@@ -1205,47 +1066,25 @@ class CrawlEngine:
             ),
         )
         ins_counts = obs_ins.get
-        if bloom_decision is not None:
-            cands.unpersist()  # the measurement's persisted candidate set
-        bloom_thread = None
-        if self._bloom is not None:
-            # OVERLAP the bloom update with the pending-cache advance /
-            # compaction below: both consume the disk-backed insert delta
-            # and are independent of each other, so their jobs interleave
-            # in the scheduler instead of paying two serial launches —
-            # shaving a parallelism-independent per-round fixed cost.
-            import threading
-
-            bloom_err: list[BaseException] = []
-
-            def _upd() -> None:
-                try:
-                    self._bloom.update(new_rows.select("url_canon"))
-                except BaseException as e:  # surfaced at join below
-                    bloom_err.append(e)
-
-            bloom_thread = threading.Thread(target=_upd, name="bloom-update")
-            bloom_thread.start()
         _mark("candidates+anti-join+write inserts")
 
         # (url_seen is DERIVED from fetch_log + frontier_inserts at read
         # time — see url_seen(); no separate per-round write)
 
         # advance the O(round) caches: the pending base loses this round's
-        # taken keys (broadcast anti — its (host, _salt) partitioning
+        # taken keys (broadcast anti — its url_canon partitioning
         # survives), the tail gains the round's pending inserts; the seen
         # tail grows by one round's insert delta (the partitioned seen base
         # stays untouched). Skipped on compaction rounds — the rebase from
         # the fresh snapshot below replaces it (and truncates lineage).
         k = max(1, self.cfg.frontier_compact_every)
         compacting = rnd % k == 0
-        try:
-            if not compacting:
-                self._advance_pending(
-                    rnd, fetch_log, new_rows, int(fetch_counts["n_taken"] or 0)
-                )
-            self._seen_tail_rounds.append(rnd)
-            self._seen_through = rnd
+        if not compacting:
+            self._advance_pending(
+                rnd, fetch_log, new_rows, int(fetch_counts["n_taken"] or 0)
+            )
+        self._seen_tail_rounds.append(rnd)
+        self._seen_through = rnd
 
         # 7. frontier commit: the round's deltas (fetch_log status updates +
         # frontier_inserts) ARE the commit — per-round bytes written scale
@@ -1256,35 +1095,18 @@ class CrawlEngine:
         # pending base+tail are rebased from it (the only O(frontier)
         # shuffles in the cycle, amortized over k rounds; the rebase also
         # bounds the pending cache's plan lineage at k joins).
-            if compacting:
-                snapshot = store.write_table(
-                    self.spark, rnd, "frontier", self.frontier_at(rnd)
-                )
-                self._set_seen_base(snapshot.select("url_canon"))
-                self._seen_tail_rounds = []
-                self._rebase_pending(
-                    snapshot.filter(F.col("status") == "pending"), rnd
-                )
-                _mark("compact frontier snapshot + refold seen base + rebase pending")
-        finally:
-            # join the update thread on EVERY exit: if the advance or the
-            # compaction raised, the orphaned thread would otherwise race a
-            # subsequent _ensure_bloom(fresh=True) rmtree of the bloom dir
-            # (its shard writes + meta commit interleaving with the rebuild
-            # could silently lose keys); the intent journal protects state
-            # on disk, but the thread's own error was also silently lost.
-            if bloom_thread is not None:
-                bloom_thread.join()
-        if bloom_thread is not None:
-            if bloom_err:
-                raise bloom_err[0]
-            _mark("bloom update (overlapped)")
+        if compacting:
+            snapshot = store.write_table(
+                self.spark, rnd, "frontier", self.frontier_at(rnd)
+            )
+            self._set_seen_base(snapshot.select("url_canon"))
+            self._seen_tail_rounds = []
+            self._rebase_pending(snapshot.filter(F.col("status") == "pending"), rnd)
+            _mark("compact frontier snapshot + refold seen base + rebase pending")
 
         # counters were observed during the two writes above — no rescans
         counters = {
             "round": rnd,
-            "urlseen_mode": "bloom" if use_bloom_now else "exact",
-            **({"bloom_crossover": bloom_decision} if bloom_decision else {}),
             "n_blocked": int(ins_counts["n_blocked"] or 0),
             "n_taken": int(fetch_counts["n_taken"] or 0),
             "n_fetched": int(fetch_counts["n_fetched"] or 0),
@@ -1292,20 +1114,12 @@ class CrawlEngine:
             "n_redirect": int(fetch_counts["n_redirect"] or 0),
             "n_new": int(ins_counts["n_new"] or 0),
         }
-        if obs_bloom is not None:
-            bm = obs_bloom.get  # populated by the insert write job
-            nd = int(bm["n_definite"] or 0)
-            nchk = int(bm["n_checked"] or 0)
-            counters["bloom_definite_new"] = nd
-            counters["bloom_checked_new"] = nchk
-            counters["bloom_skip_frac"] = round(nd / max(nd + nchk, 1), 4)
         counters["frontier_size"] = frontier_size + counters["n_new"]
         # pending is tracked arithmetically so run() never rescans the
         # frontier just to decide termination (prev_pending read above)
-        if prev_pending is not None:
-            counters["n_pending_after"] = (
-                prev_pending - counters["n_taken"] - counters["n_blocked"] + counters["n_new"]
-            )
+        counters["n_pending_after"] = (
+            prev_pending - counters["n_taken"] - counters["n_blocked"] + counters["n_new"]
+        )
         counters["secs"] = round(time.time() - t0, 3)
         counters["urls_per_sec"] = round(
             counters["n_taken"] / max(counters["secs"], 1e-9), 1
@@ -1324,15 +1138,7 @@ class CrawlEngine:
             self.init_frontier(seeds)
             latest = 0
         for rnd in range(latest + 1, max_rounds + 1):
-            prev = self.store.read_manifest(rnd - 1)["counters"].get("n_pending_after")
-            if prev is not None:
-                if prev <= 0:
-                    break
-            elif (
-                self.frontier_at(rnd - 1)
-                .filter(F.col("status") == "pending")
-                .isEmpty()
-            ):
+            if self.store.read_manifest(rnd - 1)["counters"]["n_pending_after"] <= 0:
                 break
             stats.append(self.run_round(rnd))
         return stats
@@ -1346,13 +1152,8 @@ class CrawlEngine:
             return {"round": None, "status": "not_started"}
         m = self.store.read_manifest(latest)
         # every writer records n_pending_after, so an API call costs a
-        # manifest read, not an O(frontier) reconstruction; the scan stays
-        # as the fallback for stores written before the counter existed
-        pending = m["counters"].get("n_pending_after")
-        if pending is None:
-            pending = (
-                self.frontier_at(latest).filter(F.col("status") == "pending").count()
-            )
+        # manifest read, not an O(frontier) reconstruction
+        pending = m["counters"]["n_pending_after"]
         return {
             "round": latest,
             "counters": m["counters"],
@@ -1365,8 +1166,6 @@ class CrawlEngine:
         from .maintenance import reset as _reset
 
         _reset(self.store)
-        self._bloom = None
-        self._bloom_decision = None
         self._drop_pending_caches()
         if self._seen_base is not None:
             self._seen_base.unpersist()
@@ -1398,21 +1197,33 @@ class CrawlEngine:
         )
 
     # --------------------------------------------------------------- outputs
+    def _fetch_logs(self) -> DataFrame:
+        """Every committed round's fetch_log delta — an empty frame with the
+        columns the read API projects before the first round commits."""
+        df = self.store.read_deltas(self.spark, "fetch_log")
+        if df is None:
+            return self.spark.createDataFrame(
+                [],
+                "round int, rank int, url_canon string, status string, "
+                "text_extracted string",
+            )
+        return df
+
     def crawl_order(self) -> DataFrame:
         """Dequeue positions — a projection of the fetch_log deltas (the
         rank/host columns ride in fetch_log; no separate table)."""
-        df = self.store.read_deltas(self.spark, "fetch_log")
-        assert df is not None
-        return df.select("round", "rank", "url_canon").orderBy("round", "rank")
+        return (
+            self._fetch_logs()
+            .select("round", "rank", "url_canon")
+            .orderBy("round", "rank")
+        )
 
     def url_seen(self) -> DataFrame:
         """Derived from the per-round deltas (no dedicated table): dequeued
         URLs from fetch_log, robots-blocked URLs from their insert delta
         (round 0's inserts ARE its frontier snapshot). A URL appears in
         exactly one source by construction."""
-        dequeued = self.store.read_deltas(self.spark, "fetch_log")
-        assert dequeued is not None
-        seen = dequeued.select(
+        seen = self._fetch_logs().select(
             "url_canon",
             F.col("round").alias("first_seen_round"),
             F.col("status").alias("last_status"),
@@ -1439,6 +1250,4 @@ class CrawlEngine:
         return seen
 
     def fetch_log(self) -> DataFrame:
-        df = self.store.read_deltas(self.spark, "fetch_log")
-        assert df is not None
-        return df.select("round", "url_canon", "status", "text_extracted")
+        return self._fetch_logs().select("round", "url_canon", "status", "text_extracted")

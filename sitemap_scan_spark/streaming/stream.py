@@ -90,17 +90,8 @@ def streaming_crawl(
         try:
             latest = engine.store.latest_round()
             rnd = latest + 1
-            prev = engine.store.read_manifest(latest)["counters"].get(
-                "n_pending_after"
-            )
-            if rnd > max_rounds or (prev is not None and prev <= 0):
-                done.set()
-                return
-            if prev is None and (
-                engine.frontier_at(latest)
-                .filter(F.col("status") == "pending")
-                .isEmpty()
-            ):
+            prev = engine.store.read_manifest(latest)["counters"]["n_pending_after"]
+            if rnd > max_rounds or prev <= 0:
                 done.set()
                 return
             stats.append(engine.run_round(rnd))

@@ -2,8 +2,8 @@
 
 Mirrors the reference behavioral tests (src/backup/fetcher.spec.ts):
 cycle termination, listener-style incremental discovery (anti-join), robots
-parsing, politeness budgets, hot-host salted dequeue equivalence, bloom
-prefilter exactness.
+parsing, politeness budgets, the dequeue's plan and split-input equivalence,
+and the engine's failure and pre-first-round paths.
 """
 
 from __future__ import annotations
@@ -15,11 +15,6 @@ from pyspark.sql import functions as F
 from sitemap_scan_spark.config import CrawlConfig
 from sitemap_scan_spark.functions.canonicalize import canonicalize_udf
 from sitemap_scan_spark.operators.frontier import dequeue
-from sitemap_scan_spark.operators.urlseen import (
-    IncrementalBloom,
-    anti_join_with_bloom,
-    exact_anti_join,
-)
 from sitemap_scan_spark.sources.robots import parse_robots_one, robots_gate
 from sitemap_scan_spark.sources.sitemap import expand_sitemaps, parse_sitemap_one
 
@@ -183,7 +178,7 @@ class TestDequeue:
 
     def test_budget_and_order(self, spark):
         f = self._frontier(spark)
-        taken = dequeue(f, base_budget=10, round_size=1000, salt_buckets=1).collect()
+        taken = dequeue(f, base_budget=10, round_size=1000).collect()
         by_host = {}
         for r in taken:
             by_host.setdefault(r.host, []).append(r)
@@ -195,16 +190,9 @@ class TestDequeue:
         assert ranks["https://cold.test/p0000"] == 1
         assert ranks["https://hot.test/p0000"] == 3
 
-    def test_salted_equals_unsalted(self, spark):
-        """Two-phase salted dequeue is semantics-preserving (SURVEY §4.1)."""
-        f = self._frontier(spark, n_hot=2000)
-        a = dequeue(f, 25, 500, salt_buckets=1).select("url_canon", "rank")
-        b = dequeue(f, 25, 500, salt_buckets=16).select("url_canon", "rank")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
     def test_round_size_cap(self, spark):
         f = self._frontier(spark, n_hot=300, n_cold=5)
-        taken = dequeue(f, base_budget=1000, round_size=50, salt_buckets=4)
+        taken = dequeue(f, base_budget=1000, round_size=50)
         assert taken.count() == 50
         ranks = sorted(r.rank for r in taken.collect())
         assert ranks == list(range(1, 51))
@@ -212,303 +200,48 @@ class TestDequeue:
     def test_parts_dequeue_equals_union_dequeue(self, spark):
         """Split-input dequeue (partitioned base + tail, the engine's
         O(round) cache layout) must produce bit-identical output to a
-        single-part dequeue of the union: phase-1 pruning per subset only
-        keeps MORE rows, and phase 2 is exact."""
-        from sitemap_scan_spark.operators.frontier import SALT_COL, salt_col
-
+        single-part dequeue of the union."""
         f = self._frontier(spark, n_hot=2000, n_cold=30)
         base_rows = f.filter(~F.col("url_canon").rlike("p00[0-4]"))
-        tail_rows = f.filter(F.col("url_canon").rlike("p00[0-4]"))
-        base = (
-            base_rows.withColumn(SALT_COL, salt_col(8))
-            .repartition(8, "host", SALT_COL)
-            .persist()
-        )
+        tail = f.filter(F.col("url_canon").rlike("p00[0-4]"))
+        base = base_rows.repartition(8, "url_canon").persist()
         base.count()
-        tail = tail_rows.withColumn(SALT_COL, salt_col(8))
-        got = dequeue([base, tail], 25, 500, salt_buckets=8).select("url_canon", "rank")
-        want = dequeue(f, 25, 500, salt_buckets=8).select("url_canon", "rank")
-        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+        got = dequeue([base, tail], 25, 500).select("url_canon", "rank")
+        want = dequeue(f, 25, 500).select("url_canon", "rank")
+        assert sorted(got.collect()) == sorted(want.collect())
         base.unpersist()
 
-    def test_phase1_reuses_base_partitioning(self, spark):
-        """THE O(round) phase-2 plan assertion (round-3 VERDICT task 1): on
-        a pending base hash-partitioned on (host, _salt) — including after
-        the per-round broadcast anti-join advance — the phase-1 window must
-        plan ZERO shuffle Exchanges (the O(pending) cache is ranked in
-        place); the same window over an unpartitioned input must plan one.
-        At 10^10 pending rows that Exchange was the last per-round
-        O(pending) shuffle."""
-        from sitemap_scan_spark.operators.frontier import (
-            SALT_COL,
-            host_budget_col,
-            phase1_prune,
-            salt_col,
-        )
-
+    def test_base_tail_plan_is_group_limit_then_top_k(self, spark):
+        """The per-round dequeue plan on the engine's cache layout (a
+        url_canon-partitioned persisted base, advanced by a broadcast
+        anti-join, plus a tail): a map-side ``WindowGroupLimit Partial``
+        before the per-host Exchange, a ``TakeOrderedAndProject`` cap, and
+        no single-partition Exchange — no task ever sees every survivor."""
         f = self._frontier(spark, n_hot=3000, n_cold=50)
-        base = (
-            f.withColumn(SALT_COL, salt_col(8))
-            .repartition(8, "host", SALT_COL)
-            .persist()
-        )
+        base = f.repartition(8, "url_canon").persist()
         base.count()
-        taken = f.limit(40).select("url_canon")
+        taken = f.filter(F.col("url_canon").rlike("p00[0-3]")).select("url_canon")
         advanced = base.join(F.broadcast(taken), "url_canon", "left_anti")
-        budget = host_budget_col(10)
-
-        def n_shuffles(df):
-            # the cached plan's own build-time exchange prints inside
-            # InMemoryRelation — only exchanges OUTSIDE it run per-round
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return plan.split("InMemoryRelation")[0].count("Exchange hashpartitioning")
-
-        pruned = phase1_prune(advanced.withColumn("_budget", budget), 8, 10)
-        assert n_shuffles(pruned) == 0
-        cold = phase1_prune(
-            f.withColumn("_budget", budget), 8, 10
-        )  # no _salt column, no pre-partitioning → one real shuffle
-        assert n_shuffles(cold) == 1
-        # the literal-budget conjunct must engage map-side top-k pruning
-        # (InferWindowGroupLimit) so the cold shuffle moves ≤ budget rows
-        # per (host, salt) group per map partition
-        cold_plan = cold._jdf.queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in cold_plan and "Partial" in cold_plan
-        # and the pruning itself is correct on the advanced base
-        got = {r.url_canon for r in pruned.collect()}
-        assert got and got.isdisjoint({r.url_canon for r in taken.collect()})
+        tail = f.filter(F.col("url_canon").rlike("p000[0-4]")).withColumn(
+            "url_canon", F.concat("url_canon", F.lit("/t"))
+        )
+        dq = dequeue([advanced, tail], base_budget=10, round_size=8)
+        got = sorted((r.rank, r.url_canon) for r in dq.collect())
+        dq.unpersist()
+        # the plan of the same query uncached (a persisted frame's own plan
+        # prints as an InMemoryTableScan)
+        plan = dq.select("*")._jdf.queryExecution().executedPlan().toString()
+        assert "TakeOrderedAndProject" in plan
+        assert "SinglePartition" not in plan
+        partial = plan.index("Partial")
+        assert "WindowGroupLimit" in plan[plan.rfind("\n", 0, partial) : partial]
+        # the partial limit runs below (i.e. before) the per-host shuffle
+        assert plan.index("Exchange hashpartitioning(host") < partial
+        want = dequeue(advanced.unionByName(tail), 10, 8)
+        assert got == sorted((r.rank, r.url_canon) for r in want.collect())
+        assert [rank for rank, _ in got] == list(range(1, 9))
+        want.unpersist()
         base.unpersist()
-
-
-class TestBloom:
-    def test_prefilter_exact(self, spark):
-        seen = spark.range(0, 5000).select(
-            F.concat(F.lit("https://s.test/p"), F.col("id")).alias("url_canon")
-        )
-        cands = spark.range(4000, 9000).select(
-            F.concat(F.lit("https://s.test/p"), F.col("id")).alias("url_canon")
-        )
-        got = anti_join_with_bloom(cands, seen).collect()
-        assert sorted(r.url_canon for r in got) == sorted(
-            f"https://s.test/p{i}" for i in range(5000, 9000)
-        )
-
-    def test_incremental_matches_exact(self, spark):
-        seen1 = spark.range(0, 1000).select(
-            F.concat(F.lit("u"), F.col("id")).alias("url_canon")
-        )
-        seen2 = spark.range(1000, 2000).select(
-            F.concat(F.lit("u"), F.col("id")).alias("url_canon")
-        )
-        bloom = IncrementalBloom(expected_total=10000)
-        bloom.update(seen1)
-        bloom.update(seen2)
-        all_seen = seen1.union(seen2)
-        cands = spark.range(1500, 3000).select(
-            F.concat(F.lit("u"), F.col("id")).alias("url_canon")
-        )
-        got = bloom.prefiltered_anti_join(cands, all_seen)
-        want = exact_anti_join(cands, all_seen)
-        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-    def test_sharded_identical_to_single_bitmap(self, spark):
-        """Bloom-per-bucket == single bitmap == exact join, bit-for-bit, and
-        incrementally updated the same way (SCALE_DESIGN.md D3)."""
-        from sitemap_scan_spark.operators.urlseen import ShardedBloom
-
-        seen1 = spark.range(0, 1500).select(
-            F.concat(F.lit("https://sh.test/"), F.col("id")).alias("url_canon")
-        )
-        seen2 = spark.range(1500, 2500).select(
-            F.concat(F.lit("https://sh.test/"), F.col("id")).alias("url_canon")
-        )
-        single = IncrementalBloom(expected_total=20000)
-        sharded = ShardedBloom(expected_total=20000, n_shards=8)
-        for b in (single, sharded):
-            b.update(seen1)
-            b.update(seen2)
-        all_seen = seen1.union(seen2)
-        cands = spark.range(2000, 4000).select(
-            F.concat(F.lit("https://sh.test/"), F.col("id")).alias("url_canon")
-        )
-        got_sharded = sorted(
-            r.url_canon
-            for r in sharded.prefiltered_anti_join(cands, all_seen).collect()
-        )
-        got_single = sorted(
-            r.url_canon
-            for r in single.prefiltered_anti_join(cands, all_seen).collect()
-        )
-        want = sorted(
-            r.url_canon for r in exact_anti_join(cands, all_seen).collect()
-        )
-        assert got_sharded == want
-        assert got_single == want
-
-    def test_sharded_split_skips_negative_candidates(self, spark):
-        """The routed split keeps bloom-negative rows out of the exact join:
-        needs_check must contain every truly-seen candidate (no false
-        negatives ever) and at 1% fpp only a tiny false-positive overhang."""
-        from sitemap_scan_spark.operators.urlseen import ShardedBloom
-
-        seen = spark.range(0, 3000).select(
-            F.concat(F.lit("https://sk.test/"), F.col("id")).alias("url_canon")
-        )
-        bloom = ShardedBloom(expected_total=30000, n_shards=8)
-        bloom.update(seen)
-        cands = spark.range(2500, 6000).select(
-            F.concat(F.lit("https://sk.test/"), F.col("id")).alias("url_canon")
-        )  # 500 seen + 3000 new
-        definite_new, needs_check = bloom.split(cands)
-        nc = {r.url_canon for r in needs_check.collect()}
-        dn = {r.url_canon for r in definite_new.collect()}
-        truly_seen = {f"https://sk.test/{i}" for i in range(2500, 3000)}
-        assert truly_seen <= nc  # zero false negatives
-        assert not (truly_seen & dn)
-        assert len(nc) + len(dn) == 3500
-        # the exact-join input is ~the seen overlap, not the candidate set:
-        # the 3000 new URLs skip the shuffle (1% fpp → ~30 strays allowed)
-        assert len(nc) <= 500 + 120
-
-    def test_file_backed_shards_identical_and_driver_free(self, spark, tmp_path):
-        """The 10^10-key lifecycle (round-3 VERDICT item 2): file-backed
-        shards must (a) give bit-identical splits to the in-memory dict,
-        (b) keep ZERO bitmaps on the driver — peak driver memory independent
-        of P·m, (c) persist one independently-sized file per touched shard,
-        (d) survive into a new instance with matching meta, and (e) wipe on
-        layout mismatch (a half-compatible bloom would leak duplicates)."""
-        import os
-
-        from sitemap_scan_spark.operators.urlseen import ShardedBloom
-
-        seen1 = spark.range(0, 1500).select(
-            F.concat(F.lit("https://fb.test/"), F.col("id")).alias("url_canon")
-        )
-        seen2 = spark.range(1500, 2500).select(
-            F.concat(F.lit("https://fb.test/"), F.col("id")).alias("url_canon")
-        )
-        d = str(tmp_path / "bloomdir")
-        mem = ShardedBloom(expected_total=20000, n_shards=8)
-        fb = ShardedBloom(expected_total=20000, n_shards=8, dir=d)
-        for b in (mem, fb):
-            b.update(seen1)
-            b.update(seen2)  # incremental OR-merge into existing files
-
-        # (b) no driver-resident bitmaps in file mode
-        assert fb.shards is None
-        # (c) one file per touched shard, each exactly m/8 bytes
-        files = sorted(f for f in os.listdir(d) if f.endswith(".bloom"))
-        assert 1 <= len(files) <= 8
-        for f in files:
-            assert os.path.getsize(os.path.join(d, f)) == fb.m // 8
-
-        cands = spark.range(2000, 4000).select(
-            F.concat(F.lit("https://fb.test/"), F.col("id")).alias("url_canon")
-        )
-
-        def flags(bloom):
-            dn, nc = bloom.split(cands)
-            return (
-                sorted(r.url_canon for r in dn.collect()),
-                sorted(r.url_canon for r in nc.collect()),
-            )
-
-        # (a) identical split decisions (same hashes, same bit layout)
-        assert flags(fb) == flags(mem)
-
-        # (d) a new instance over the same dir reuses the files
-        fb2 = ShardedBloom(expected_total=20000, n_shards=8, dir=d)
-        assert flags(fb2) == flags(mem)
-
-        # (e) layout mismatch (different shard count) starts empty
-        fb3 = ShardedBloom(expected_total=20000, n_shards=4, dir=d)
-        dn3, nc3 = fb3.split(cands)
-        assert nc3.count() == 0 and dn3.count() == 2000
-
-    def test_file_backed_generations_and_loss_detection(self, spark, tmp_path):
-        """ADVICE round-3 (urlseen cache staleness + silent shard loss):
-        (a) every update writes each touched shard under a NEW
-        generation-unique filename (executor caches key on path — identical
-        content can never be served stale) and retires the old generation;
-        (b) _meta.json records per-shard generations, so a recorded-but-
-        missing shard file RAISES instead of silently classifying seen URLs
-        as definite_new past the exact backstop."""
-        import os
-        import re
-
-        from sitemap_scan_spark.operators.urlseen import ShardedBloom
-
-        d = str(tmp_path / "bloomgen")
-        fb = ShardedBloom(expected_total=20000, n_shards=4, dir=d)
-        seen1 = spark.range(0, 800).select(
-            F.concat(F.lit("https://gen.test/"), F.col("id")).alias("url_canon")
-        )
-        seen2 = spark.range(800, 1600).select(
-            F.concat(F.lit("https://gen.test/"), F.col("id")).alias("url_canon")
-        )
-        fb.update(seen1)
-        gen_of = lambda f: int(re.search(r"\.g(\d+)\.bloom$", f).group(1))
-        files1 = sorted(f for f in os.listdir(d) if f.endswith(".bloom"))
-        assert files1 and all(gen_of(f) == 1 for f in files1)
-        fb.update(seen2)
-        files2 = sorted(f for f in os.listdir(d) if f.endswith(".bloom"))
-        # (a) superseded generations of re-touched shards are gone — exactly
-        # one file per shard, and its generation matches the meta
-        shard_of = lambda f: int(f.split("_")[1].split(".")[0])
-        assert len({shard_of(f) for f in files2}) == len(files2)
-        assert all(gen_of(f) == fb._gens[shard_of(f)] for f in files2)
-        assert any(gen_of(f) == 2 for f in files2)  # some shard re-touched
-
-        cands = spark.range(1500, 2000).select(
-            F.concat(F.lit("https://gen.test/"), F.col("id")).alias("url_canon")
-        )
-        dn, nc = fb.split(cands)
-        assert {r.url_canon for r in nc.collect()} >= {
-            f"https://gen.test/{i}" for i in range(1500, 1600)
-        }
-
-        # (b) delete one touched shard file → the probe must fail loudly
-        victim = next(f for f in os.listdir(d) if f.endswith(".bloom"))
-        os.remove(os.path.join(d, victim))
-        fb_lost = ShardedBloom(expected_total=20000, n_shards=4, dir=d)
-        import pytest as _pytest
-
-        dn_l, nc_l = fb_lost.split(cands)
-        with _pytest.raises(Exception, match="(?i)bloom shard .* missing"):
-            dn_l.unionByName(nc_l).count()
-
-    def test_file_backed_uncommitted_update_refused(self, spark, tmp_path):
-        """ADVICE round-4: a driver crash between the executors' g+1 shard
-        writes and the meta commit leaves _update.intent in the dir; a NEW
-        process attaching non-fresh must refuse to serve (its probes would
-        silently miss that update's keys), while a completed update leaves
-        no journal behind and re-attach works."""
-        import os
-
-        import pytest as _pytest
-
-        from sitemap_scan_spark.operators.urlseen import ShardedBloom
-
-        d = str(tmp_path / "bloomintent")
-        fb = ShardedBloom(expected_total=20000, n_shards=4, dir=d)
-        seen = spark.range(0, 500).select(
-            F.concat(F.lit("https://intent.test/"), F.col("id")).alias("url_canon")
-        )
-        fb.update(seen)
-        assert not os.path.exists(os.path.join(d, "_update.intent"))
-        ShardedBloom(expected_total=20000, n_shards=4, dir=d)  # clean attach OK
-
-        # simulate the crash window: journal open, meta never committed
-        with open(os.path.join(d, "_update.intent"), "w") as f:
-            f.write("{}")
-        with _pytest.raises(RuntimeError, match="uncommitted update"):
-            ShardedBloom(expected_total=20000, n_shards=4, dir=d)
-        # fresh=True re-seeds from scratch and clears the journal
-        fb2 = ShardedBloom(expected_total=20000, n_shards=4, dir=d, fresh=True)
-        assert not os.path.exists(os.path.join(d, "_update.intent"))
-        fb2.update(seen)
-        dn, nc = fb2.split(seen.limit(10))
-        assert dn.count() == 0 and nc.count() == 10
 
 
 class TestBroadcastKeyCap:
@@ -787,9 +520,9 @@ class TestPendingCacheLineage:
 
 
 class TestFailurePathRobustness:
-    """Round-5 VERDICT findings 2+3: the overlapped bloom-update thread must
-    be joined on the FAILURE path too, and an oversized sleeping-hosts dim
-    must fall back to the distributed join instead of a driver dict."""
+    """Unhappy and early paths of the engine: the dequeue's persisted fetch
+    set is released when the round fails, and the read API answers before
+    the first round commits."""
 
     def _corpus(self, path):
         import os
@@ -798,6 +531,7 @@ class TestFailurePathRobustness:
 
         os.makedirs(path, exist_ok=True)
         rows = [
+            ("https://h.test/robots.txt", "User-agent: *\nDisallow: /b"),
             (
                 "https://h.test/sitemap.xml",
                 "<urlset><url><loc>https://h.test/a</loc></url>"
@@ -825,26 +559,12 @@ class TestFailurePathRobustness:
             {"seed_url": ["https://h.test/a"], "priority": [0.8]}
         ).to_parquet(os.path.join(path, "seeds.parquet"), index=False)
 
-    def test_bloom_thread_joined_when_compaction_raises(self, spark, tmp_path):
-        """Make the compaction raise MID-OVERLAP: the exception must
-        propagate only after the update thread is joined (no orphan racing
-        a later fresh=True rebuild), and the bloom dir must be attachable
-        afterwards (intent journal committed, not dangling)."""
-        import threading
-
-        from sitemap_scan_spark.operators.urlseen import ShardedBloom
+    def _engine(self, spark, tmp_path):
         from sitemap_scan_spark.plans.rounds import CrawlEngine
 
         corpus = str(tmp_path / "corpus")
         self._corpus(corpus)
-        # bloom forced on; every round compacts
-        cfg = CrawlConfig(
-            base_host_budget=10,
-            round_size=100,
-            max_rounds=3,
-            bloom_min_frontier=0,
-            frontier_compact_every=1,
-        )
+        cfg = CrawlConfig(base_host_budget=10, round_size=100, max_rounds=3)
         eng = CrawlEngine(
             spark,
             spark.read.parquet(f"{corpus}/pages.parquet"),
@@ -852,21 +572,48 @@ class TestFailurePathRobustness:
             str(tmp_path / "wd"),
         )
         eng.init_frontier(spark.read.parquet(f"{corpus}/seeds.parquet"))
+        return eng
 
-        def boom(*a, **k):
-            raise RuntimeError("compaction boom")
+    def test_dequeue_released_when_fetch_log_write_raises(self, spark, tmp_path):
+        """The fetch_log write fails after its job ran (the persisted
+        dequeue result is materialized by then): the round must propagate
+        the error and leave no persisted RDD behind beyond the engine's own
+        pending and seen caches."""
+        from sitemap_scan_spark.plans.checkpoint import RoundStore
 
-        eng._rebase_pending = boom
-        with pytest.raises(RuntimeError, match="compaction boom"):
+        eng = self._engine(spark, tmp_path)
+        jsc = spark.sparkContext._jsc
+
+        class FailAfterFetchLog(RoundStore):
+            def write_table(self, spark_, rnd, name, df):
+                out = super().write_table(spark_, rnd, name, df)
+                if name == "fetch_log":
+                    raise RuntimeError("fetch_log write failed")
+                return out
+
+        eng.store = FailAfterFetchLog(eng.store.root)
+        before = set(jsc.getPersistentRDDs().keySet())
+        with pytest.raises(RuntimeError, match="fetch_log write failed"):
             eng.run_round(1)
-        assert not any(
-            t.name == "bloom-update" and t.is_alive()
-            for t in threading.enumerate()
-        ), "bloom update thread orphaned past the failure"
-        # the dir is attachable by a new process: no uncommitted intent
-        ShardedBloom(
-            expected_total=1 << 16,
-            n_shards=cfg.bloom_shards,
-            dir=str(tmp_path / "wd" / "rounds" / "_urlseen_bloom"),
-            fresh=False,
-        )
+        leaked = set(jsc.getPersistentRDDs().keySet()) - before
+        own = [
+            c
+            for c in (eng._pending_base, eng._pending_tail, eng._seen_base)
+            if c is not None
+        ]
+        assert eng._pending_base is not None  # the round got past the dequeue
+        assert len(leaked) == len(own), (leaked, len(own))
+
+    def test_read_api_before_first_round(self, spark, tmp_path):
+        """Right after init_frontier: crawl_order() and fetch_log() are
+        empty frames with their usual columns, and url_seen() holds round
+        0's robots_blocked rows."""
+        eng = self._engine(spark, tmp_path)
+        order = eng.crawl_order()
+        assert order.columns == ["round", "rank", "url_canon"]
+        assert order.count() == 0
+        log = eng.fetch_log()
+        assert log.columns == ["round", "url_canon", "status", "text_extracted"]
+        assert log.count() == 0
+        seen = [tuple(r) for r in eng.url_seen().collect()]
+        assert seen == [("https://h.test/b", 0, "robots_blocked")]

@@ -424,8 +424,8 @@ class TestEngineApi:
         p = eng.progress()
         assert p["round"] == 2 and p["counters"]["n_taken"] > 0
         # the counter path must agree with the frontier scan it replaced
-        # (round-3 VERDICT task 4), and a counter-less legacy manifest must
-        # fall back to the scan
+        # (round-3 VERDICT task 4); every writer records the counter, so a
+        # counter-less manifest is a foreign store and fails loudly
         scanned = (
             eng.frontier_at(2).filter("status = 'pending'").count()
         )
@@ -439,7 +439,8 @@ class TestEngineApi:
         del manifest["counters"]["n_pending_after"]
         with open(mpath, "w") as f:
             json.dump(manifest, f)
-        assert eng.progress()["pending"] == scanned
+        with pytest.raises(KeyError, match="n_pending_after"):
+            eng.progress()
         eng.reset()
         assert eng.progress()["status"] == "not_started"
 

@@ -1,17 +1,13 @@
-"""Hot-host skew evidence (north rule): the two-phase salted dequeue vs the
-naive per-host window on a frontier where ONE host owns ~half of all URLs.
-
-Builds the full pending frontier from the scale corpus (hot host included),
-times dequeue(salt=1) vs dequeue(salt=16) at the same core count, verifies
-the outputs are IDENTICAL (salting is semantics-preserving pruning), and
-appends the numbers to BENCH/BASELINE.md.
-
-Also measures the FETCH JOIN under a 50%-skew *taken* set (round-3 VERDICT
-item 8): the engine broadcasts the round-sized taken side and streams the
+"""Hot-host skew evidence for the FETCH JOIN: a 50%-skew *taken* set
+(round-3 VERDICT item 8) on the scale corpus, where ONE host owns ~half of
+all URLs. The engine broadcasts the round-sized taken side and streams the
 pages scan past it, so output partitioning follows the (uniform) scan
 splits, not hosts — a skewed taken set must cost the same as a uniform one
 and leave no straggler partition. Reported: skew/uniform wall ratio +
 max/median output-partition balance.
+
+The taken set is ``--budget`` × 64 rows. Appends the numbers to
+BENCH/BASELINE.md.
 
 Usage: python tools/skew_bench.py [--cores 16] [--budget 500]
 """
@@ -39,7 +35,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from sitemap_scan_spark.functions.canonicalize import canonicalize_udf
-    from sitemap_scan_spark.operators.frontier import dequeue
     from sitemap_scan_spark.session import get_spark
 
     s = get_spark(f"skew{cores}", master=f"local[{cores}]", shuffle_partitions=cores)
@@ -51,44 +46,11 @@ def main() -> None:
         .select(
             "url_canon",
             F.regexp_extract("url_canon", r"^https?://([^/:?#]+)", 1).alias("host"),
-            F.lit(1).alias("depth"),
-            F.lit(0.5).alias("priority"),
-            F.lit(0).alias("discovered_round"),
-            F.lit(None).cast("int").alias("crawl_delay"),
         )
     )
-    frontier = frontier.localCheckpoint(eager=True)  # isolate dequeue timing
-    n = frontier.count()
+    frontier = frontier.localCheckpoint(eager=True)
     hot = frontier.groupBy("host").count().orderBy(F.col("count").desc()).first()
-    print(f"frontier={n} rows, hottest host {hot.host} = {hot['count']} rows")
-
-    results = {}
-    outs = {}
-    for salt in (1, 16):
-        t0 = time.time()
-        out = dequeue(frontier, budget, round_size=10**9, salt_buckets=salt)
-        cnt = out.count()
-        dt = round(time.time() - t0, 2)
-        results[f"salt_{salt}"] = dt
-        outs[salt] = out.select("url_canon", "rank")
-        print(f"salt={salt}: {dt}s taken={cnt}")
-
-    diff = outs[1].exceptAll(outs[16]).count() + outs[16].exceptAll(outs[1]).count()
-    results["identical_output"] = diff == 0
-    results["speedup"] = round(results["salt_1"] / results["salt_16"], 2)
-    print(json.dumps(results))
-
-    os.makedirs("BENCH", exist_ok=True)
-    with open(os.path.join("BENCH", "BASELINE.md"), "a") as f:
-        f.write(
-            f"\n### Hot-host skew dequeue ({time.strftime('%Y-%m-%d %H:%M')}, "
-            f"{n} frontier rows, hottest host {hot['count']} rows, "
-            f"budget {budget}, cores {cores})\n\n"
-            f"| naive window (salt=1) | salted two-phase (salt=16) | speedup | identical output |\n"
-            f"|---|---|---|---|\n"
-            f"| {results['salt_1']}s | {results['salt_16']}s "
-            f"| {results['speedup']}× | {'yes' if diff == 0 else 'NO'} |\n"
-        )
+    print(f"hottest host {hot.host} = {hot['count']} rows")
 
     # ---- fetch join under a 50%-skew taken set -----------------------------
     pages = (
