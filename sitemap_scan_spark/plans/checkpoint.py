@@ -175,15 +175,16 @@ class RoundStore:
         """Read parquet dirs of table ``name``, skipping schema inference
         when this process wrote the table before (see _schemas).
 
-        Cross-round unions validate ONE parquet footer (a driver-side
-        metadata read, no Spark job) against the cached schema: declared-
-        schema reads silently null-fill missing columns, so a resume over
-        rounds written by an older code version must fall back to inference
-        instead of fabricating nulls."""
+        Every declared-schema read first checks the parquet footers of the
+        oldest and the newest path (driver-side metadata reads, no Spark
+        job) against the cached schema: a declared-schema read silently
+        null-fills missing columns, so a read of rounds written by another
+        code version must fall back to inference instead of fabricating
+        nulls. ``paths`` are in round order."""
         reader = spark.read
         schema = self._schemas.get(name)
-        if schema is not None and len(paths) > 1 and not self._footer_matches(
-            paths[0], schema
+        if schema is not None and not all(
+            self._footer_matches(p, schema) for p in {paths[0], paths[-1]}
         ):
             schema = None
         if schema is not None:

@@ -27,7 +27,6 @@ Scale notes (10^10 frontier, 100 TB pages):
 from __future__ import annotations
 
 import os
-import re
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -65,36 +64,24 @@ class CrawlEngine:
         self.cfg = cfg
         self.workdir = workdir
         self.store = RoundStore(os.path.join(workdir, "rounds"))
-        # O(round)-per-round caches (round 3; SCALE_DESIGN.md). The old
-        # design re-shuffled + re-persisted the FULL latest-wins frontier
-        # view every round — O(frontier) work per round that dominates at
-        # 10^10 rows. Split instead into:
-        #  - seen-keys BASE: url_canon only, hash-partitioned + persisted,
-        #    append-only so it is UNCHANGED between compactions (zero
-        #    per-round cost; anti-joins against it shuffle only the probe
-        #    side) — the in-memory analog of an Iceberg table bucketed by
-        #    url_canon;
-        #  - seen-keys TAIL: the insert deltas since the base (≤
-        #    compact_every round-sized parquet reads), anti-joined after
-        #    the base (cands ∖ (A∪B) = (cands ∖ A) ∖ B);
-        #  - PENDING cache, split BASE + TAIL: the base is hash-partitioned
-        #    on url_canon and persisted — a hot host spreads over every
-        #    partition, and the dequeue's map-side per-host group limit
-        #    prunes it to ≤ base_host_budget rows per host per partition
-        #    before the per-host shuffle. Advanced each round by a broadcast
-        #    anti-join of the round's taken keys (narrow — BroadcastHashJoin
-        #    preserves the streamed side's partitioning). The tail holds the
-        #    pending inserts since the last rebase (round-sized); both are
-        #    rebased from the disk snapshot at every compaction, so cache
-        #    lineage never exceeds frontier_compact_every joins (ADVICE round
-        #    3: unbounded plan growth risked O(R²) analysis + driver stack
-        #    overflow on very long crawls).
-        self._pending_base: DataFrame | None = None
-        self._pending_tail: DataFrame | None = None
-        self._pending_round: int | None = None
-        self._seen_base: DataFrame | None = None
-        self._seen_tail_rounds: list[int] = []
-        self._seen_through: int | None = None
+        # ONE persisted frontier cache (SCALE_DESIGN.md "Frontier base +
+        # tail"). The BASE is frontier_at(b) — every row and status,
+        # hash-partitioned on url_canon — where b is the last cold rebuild
+        # or compaction round; the TAIL is the list of rounds committed
+        # since b, whose round-sized deltas are re-read from disk. Each
+        # round derives both of its frontier inputs from the two:
+        #  - pending (the dequeue input): the base's pending rows ∪ the
+        #    tail's pending inserts, each part minus the tail's fetch_log
+        #    keys (:meth:`_pending_parts`);
+        #  - seen (the anti-join side): the base's keys, then the tail's
+        #    insert keys (:meth:`_anti_seen`).
+        # Between compactions nothing is re-persisted and no job runs to
+        # advance the cache; a compaction rebases it from the new disk
+        # snapshot, so the tail stays < frontier_compact_every rounds and
+        # the plans built on the cache do not grow with the crawl.
+        self._frontier: DataFrame | None = None
+        self._frontier_round: int | None = None
+        self._tail_rounds: list[int] = []
         # wall-clock politeness dim cache: host → next_eligible_round
         # (sleeping hosts only — broadcast-sized by construction, so a
         # driver dict is the right home; persisted per round via pyarrow)
@@ -439,163 +426,76 @@ class CrawlEngine:
             )
         return rows
 
-    def _broadcast_key_cap(self) -> int:
-        """Max key count the per-round broadcast anti-joins may ship.
+    def _frontier_base(self, rnd: int) -> DataFrame:
+        """The persisted frontier base; with the tail (``_tail_rounds``) it
+        describes the frontier as of round ``rnd``.
 
-        Sizing rationale (replaces the old 4M magic number): a broadcast
-        hash relation over string URL keys costs ~120 bytes/key (≤~80-byte
-        canonical URL + UnsafeRow + hash-map slot overhead); budget at most
-        ~3 % of the driver heap for it (the relation exists once on the
-        driver and once per executor while the round's jobs run), floored
-        at 1M keys so small-heap dev sessions still broadcast round-sized
-        sets, capped at 32M where torrent-broadcast latency dominates
-        regardless of heap."""
-        mem = (self.spark.conf.get("spark.driver.memory", "1g") or "1g").strip().lower()
-        units = {"": 1 << 20, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-        m = re.match(r"^([\d.]+)\s*([kmgt]?)b?$", mem)
-        try:
-            # Spark accepts '8g', '8gb', '512m', '512mb', and bare numbers
-            # (bare = MiB, matching JVM -Xmx semantics Spark documents).
-            driver_bytes = int(float(m.group(1)) * units[m.group(2)]) if m else 1 << 30
-        except (ValueError, OverflowError):
-            driver_bytes = 1 << 30
-        return max(1_000_000, min(32_000_000, int(driver_bytes * 0.03 / 120)))
+        Rebuilt only when it does not line up with ``rnd`` — process start,
+        after a refresh round, after a round that failed once it had joined
+        the tail or begun its rebase — from one latest-wins view of
+        frontier_at(rnd). Compaction rounds rebase it from their own
+        snapshot (:meth:`_rebase`)."""
+        through = self._tail_rounds[-1] if self._tail_rounds else self._frontier_round
+        if self._frontier is None or through != rnd:
+            self._rebase(self.frontier_at(rnd), rnd)
+        return self._frontier
 
-    def _pending_parts(self, rnd: int) -> tuple[DataFrame, DataFrame | None]:
-        """The PENDING frontier rows as of round ``rnd`` — the dequeue
-        input — as (BASE, TAIL-or-None).
-
-        BASE is hash-partitioned on url_canon and persisted: the dequeue's
-        map-side per-host group limit prunes it in place before the
-        per-host shuffle (plan-asserted in tests), so the per-round cost of
-        the O(pending) cache is one in-memory scan plus a shuffle of at most
-        base_host_budget rows per host per partition.
-        TAIL is the pending inserts since the last rebase (≤ compact_every
-        round-sized sets). Both advance narrowly per round via
-        :meth:`_advance_pending`; cold path (process start, post-refresh,
-        compaction) rebuilds from the latest-wins view / disk snapshot —
-        the one O(frontier) shuffle, amortized."""
-        if self._pending_base is not None and self._pending_round == rnd:
-            return self._pending_base, self._pending_tail
-        self._rebase_pending(
-            self.frontier_at(rnd).filter(F.col("status") == "pending"), rnd
-        )
-        return self._pending_base, self._pending_tail
-
-    def _rebase_pending(self, pending: DataFrame, rnd: int) -> None:
-        """(Re)build the partitioned pending base from ``pending`` and clear
-        the tail — called cold and at every compaction, which also truncates
-        the cache lineage (ADVICE round 3: the advance chain must not grow
-        unboundedly).
-
-        ``pending`` must derive from DISK (the snapshot / latest-wins
-        reconstruction), never from the caches being replaced: the old
-        caches are dropped BEFORE the new base materializes, so the
-        frontier is never memory-resident twice (the transient doubling
-        OOMed a 16-thread local JVM at 6.4M pending rows on an 8g heap)."""
-        self._drop_pending_caches()
+    def _rebase(self, frontier: DataFrame, rnd: int) -> None:
+        """Persist ``frontier`` (frontier_at(rnd), read from DISK) as the
+        base, hash-partitioned on url_canon, and clear the tail. The old
+        base is dropped BEFORE the new one materializes, so the frontier is
+        never memory-resident twice (the transient doubling OOMed a
+        16-thread local JVM at 6.4M pending rows on an 8g heap)."""
+        self._drop_frontier()
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        base = pending.repartition(n, "url_canon").persist()
+        base = frontier.repartition(n, "url_canon").persist()
         base.count()
-        self._pending_base = base
-        self._pending_tail = None
-        self._pending_round = rnd
+        self._frontier, self._frontier_round = base, rnd
 
-    def _drop_pending_caches(self) -> None:
-        for c in (self._pending_base, self._pending_tail):
-            if c is not None:
-                c.unpersist()
-        self._pending_base = None
-        self._pending_tail = None
-        self._pending_round = None
+    def _drop_frontier(self) -> None:
+        if self._frontier is not None:
+            self._frontier.unpersist()
+        self._frontier, self._frontier_round, self._tail_rounds = None, None, []
 
-    def _advance_pending(
-        self, rnd: int, taken_keys: DataFrame, new_rows: DataFrame, n_taken: int
-    ) -> None:
-        """pending(rnd) = pending(rnd-1) ∖ taken(rnd) ∪ new-pending(rnd).
+    def _tail(self, name: str) -> DataFrame | None:
+        """Table ``name`` of every tail round as one multi-path scan (≤
+        compact_every round-sized deltas), or None on an empty tail."""
+        if not self._tail_rounds:
+            return None
+        paths = [os.path.join(self.store._dir(r), name) for r in self._tail_rounds]
+        return self.store.read_paths(self.spark, name, paths)
 
-        Both deltas are round-sized and disk-backed. The base side drops
-        its taken rows via a BROADCAST anti-join — narrow, so the persisted
-        url_canon partitioning survives into the next dequeue. New pending
-        rows go to the TAIL (a union onto the base would destroy its
-        reported partitioning); the tail stays round-sized because
-        compaction folds it back into the base. Rounds too large to
-        broadcast (cap derived from the driver heap,
-        :meth:`_broadcast_key_cap`) invalidate the cache instead — a shuffle
-        anti-join would shuffle the base AND lose its partitioning, strictly
-        worse than the cold rebuild it falls back to."""
-        if self._pending_base is None or self._pending_round != rnd - 1:
-            return  # no valid parent — next _pending_parts() rebuilds cold
-        if n_taken > self._broadcast_key_cap():
-            self._drop_pending_caches()
-            return
-        keys = F.broadcast(taken_keys.select("url_canon"))
-        base_nxt = self._pending_base.join(keys, "url_canon", "left_anti").persist()
-        tail_nxt = new_rows.filter(F.col("status") == "pending").select(
-            *self._pending_base.columns
-        )
-        if self._pending_tail is not None:
-            tail_nxt = (
-                self._pending_tail.join(keys, "url_canon", "left_anti")
-                .unionByName(tail_nxt)
-            )
-        tail_nxt = tail_nxt.persist()
-        # materialize BEFORE dropping the parents — ONE job scans both
-        # persisted frames (a count per frame would pay a second job launch
-        # per round for no extra information)
-        base_nxt.unionByName(tail_nxt).count()
-        self._pending_base.unpersist()
-        if self._pending_tail is not None:
-            self._pending_tail.unpersist()
-        self._pending_base = base_nxt
-        self._pending_tail = tail_nxt
-        self._pending_round = rnd
+    def _pending_parts(self, rnd: int) -> list[DataFrame]:
+        """The PENDING frontier rows as of round ``rnd`` — the dequeue
+        input — as disjoint parts: the base's pending rows and the tail's
+        pending inserts, each minus the keys the tail's rounds fetched.
 
-    def _seen_parts(self, rnd: int) -> tuple[DataFrame, DataFrame | None]:
-        """URL-seen keys through round ``rnd`` as (BASE, TAIL-or-None).
+        The parts are anti-joined separately rather than unioned first: a
+        join keyed on url_canon leaves the base part hash-partitioned on
+        url_canon (only the round-sized key side moves), so the dequeue's
+        map-side per-host group limit prunes it in place before the
+        per-host shuffle (plan-asserted in tests)."""
+        pending = F.col("status") == "pending"
+        base = self._frontier_base(rnd).filter(pending)
+        inserts = self._tail("frontier_inserts")
+        if inserts is None:
+            return [base]
+        taken = self._tail("fetch_log")
+        return [
+            exact_anti_join(base, taken),
+            exact_anti_join(inserts.filter(pending), taken),
+        ]
 
-        BASE is url_canon-only, hash-partitioned + persisted, and — because
-        the seen set is append-only — UNCHANGED between compactions: the
-        per-round anti-join against it shuffles only the probe side. TAIL
-        is the union of the insert deltas not yet folded in (≤
-        compact_every round-sized parquet reads). Cold path (process
-        start, post-refresh): one full-view key scan rebuilds the base."""
-        if self._seen_base is None or self._seen_through != rnd:
-            self._set_seen_base(self.frontier_at(rnd).select("url_canon"))
-            self._seen_tail_rounds = []
-            self._seen_through = rnd
-        tail = None
-        if self._seen_tail_rounds:
-            paths = [
-                os.path.join(self.store._dir(r), "frontier_inserts")
-                for r in self._seen_tail_rounds
-            ]
-            tail = self.store.read_paths(
-                self.spark, "frontier_inserts", paths
-            ).select("url_canon")
-        return self._seen_base, tail
-
-    def _set_seen_base(self, keys: DataFrame) -> None:
-        """``keys`` always derives from disk (snapshot / latest-wins view),
-        so the old base is dropped FIRST — the seen set is never cached
-        twice (see :meth:`_rebase_pending` on why the transient doubling
-        matters)."""
-        if self._seen_base is not None:
-            self._seen_base.unpersist()
-            self._seen_base = None
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        df = keys.repartition(n, "url_canon").persist()
-        df.count()
-        self._seen_base = df
-
-    def _anti_seen(self, df: DataFrame, seen_base: DataFrame, seen_tail: DataFrame | None) -> DataFrame:
-        """df ∖ seen, distributed over the base/tail split:
-        df ∖ (A ∪ B) = (df ∖ A) ∖ B — the base side reuses its persisted
-        partitioning (only df shuffles), the tail join is round-sized."""
-        out = exact_anti_join(df, seen_base)
-        if seen_tail is not None:
-            out = exact_anti_join(out, seen_tail)
-        return out
+    def _anti_seen(self, df: DataFrame, rnd: int) -> DataFrame:
+        """df ∖ seen(rnd), over the base/tail split: df ∖ (A ∪ B) =
+        (df ∖ A) ∖ B. A is the base's keys — seen is append-only, so every
+        base row, whatever its status, is a seen key — and a shuffled join
+        reuses the base's url_canon partitioning, so only df moves (below
+        the broadcast threshold Spark broadcasts A instead; plans/r08/). B
+        is the tail's insert keys, round-sized."""
+        out = exact_anti_join(df, self._frontier_base(rnd))
+        inserts = self._tail("frontier_inserts")
+        return out if inserts is None else exact_anti_join(out, inserts)
 
     # ---------------------------------------------------------- re-discovery
     def _discovery_state_path(self) -> str:
@@ -848,6 +748,37 @@ class CrawlEngine:
         fetch_log = self.store.write_table(self.spark, rnd, "fetch_log", to_write)
         return fetch_log, obs_fetch.get  # populated by the write job
 
+    def _candidates(self, fetch_log: DataFrame) -> DataFrame:
+        """The candidate links of a fetch_log delta: the links of fetched
+        rows and the targets of redirects, resolved and canonicalized in
+        one Arrow-vectorized pass, excluded, deduplicated per round (max
+        priority, min depth) and cut at max_depth."""
+        cfg = self.cfg
+        links = fetch_log.filter(F.col("status") == "fetched").select(
+            F.col("url_canon").alias("base"),
+            F.explode("links").alias("raw"),
+            (F.col("depth") + 1).alias("cand_depth"),
+            F.lit(cfg.link_priority).alias("cand_priority"),
+        )
+        redirects = fetch_log.filter(F.col("status") == "redirect").select(
+            F.col("url_canon").alias("base"),
+            F.col("redirect_to").alias("raw"),
+            (F.col("depth") + 1).alias("cand_depth"),
+            F.col("priority").alias("cand_priority"),
+        )
+        cands = with_resolved_canonical(
+            links.unionByName(redirects), "base", "raw", "url_canon"
+        ).select("url_canon", "cand_depth", "cand_priority")
+        return (
+            self._exclude_filter(cands)
+            .groupBy("url_canon")
+            .agg(
+                F.max("cand_priority").alias("priority"),
+                F.min("cand_depth").alias("depth"),
+            )
+            .filter(F.col("depth") <= cfg.max_depth)
+        )
+
     def run_round(self, rnd: int) -> dict:
         """One crawl round, WRITE-FIRST: each stage materializes its delta to
         the round directory once and continues from the re-read — no
@@ -870,8 +801,7 @@ class CrawlEngine:
         # the frontier row), so every pending row is eligible by construction
         # — except hosts sleeping off a crawl_delay > round_period (CRAWL_SPEC
         # Round 3a: wall-clock politeness), gated by the tiny host_state dim
-        pend_base, pend_tail = self._pending_parts(rnd - 1)
-        eligible_parts = [pend_base] + ([pend_tail] if pend_tail is not None else [])
+        eligible_parts = self._pending_parts(rnd - 1)
         period = cfg.round_period()
         wallclock = self._wallclock_politeness_on()
         prev_host_state = self._host_state(rnd - 1) if wallclock else None
@@ -1011,47 +941,20 @@ class CrawlEngine:
                 self._sleeping_oversized_round = None
         _mark("dequeue+fetch+parse+write fetch_log")
 
-        # 5/6. candidate links from the fetch_log delta: explode + redirect
-        # targets, canonicalize, exclude, per-round dedup, exact anti-join
-        # vs the whole frontier → this round's inserts
-        links = fetch_log.filter(F.col("status") == "fetched").select(
-            F.col("url_canon").alias("base"),
-            F.explode("links").alias("raw"),
-            (F.col("depth") + 1).alias("cand_depth"),
-            F.lit(cfg.link_priority).alias("cand_priority"),
-        )
-        redirects = fetch_log.filter(F.col("status") == "redirect").select(
-            F.col("url_canon").alias("base"),
-            F.col("redirect_to").alias("raw"),
-            (F.col("depth") + 1).alias("cand_depth"),
-            F.col("priority").alias("cand_priority"),
-        )
-        # resolve+canonicalize: JVM fast path for the common href shapes,
-        # pandas UDF only for the exotic remainder (split+union)
-        cands = with_resolved_canonical(
-            links.unionByName(redirects), "base", "raw", "url_canon"
-        ).select("url_canon", "cand_depth", "cand_priority")
-        cands = (
-            self._exclude_filter(cands)
-            .groupBy("url_canon")
-            .agg(
-                F.max("cand_priority").alias("priority"),
-                F.min("cand_depth").alias("depth"),
-            )
-            .filter(F.col("depth") <= cfg.max_depth)
-        )
+        # 5/6. candidate links (_candidates), exact anti-join vs the whole
+        # frontier → this round's inserts
+        cands = self._candidates(fetch_log)
         # frontier size and pending are tracked arithmetically in the
         # manifest (no frontier scan). Every writer in this repo records them
         # (init_frontier, refresh_discovery, run_round), so a missing key
         # means a foreign/corrupt store — fail loudly rather than quietly
         # re-counting.
         frontier_size = prev_counters["frontier_size"]
-        seen_base, seen_tail = self._seen_parts(rnd - 1)
-        fresh = self._anti_seen(cands, seen_base, seen_tail)
+        fresh = self._anti_seen(cands, rnd - 1)
         # robots gate AT INSERT — only the (small) fresh set is joined
         # against the rules dim; blocked rows enter the frontier terminally
         obs_ins = Observation()
-        new_rows = store.write_table(
+        store.write_table(
             self.spark,
             rnd,
             "frontier_inserts",
@@ -1071,38 +974,22 @@ class CrawlEngine:
         # (url_seen is DERIVED from fetch_log + frontier_inserts at read
         # time — see url_seen(); no separate per-round write)
 
-        # advance the O(round) caches: the pending base loses this round's
-        # taken keys (broadcast anti — its url_canon partitioning
-        # survives), the tail gains the round's pending inserts; the seen
-        # tail grows by one round's insert delta (the partitioned seen base
-        # stays untouched). Skipped on compaction rounds — the rebase from
-        # the fresh snapshot below replaces it (and truncates lineage).
-        k = max(1, self.cfg.frontier_compact_every)
-        compacting = rnd % k == 0
-        if not compacting:
-            self._advance_pending(
-                rnd, fetch_log, new_rows, int(fetch_counts["n_taken"] or 0)
-            )
-        self._seen_tail_rounds.append(rnd)
-        self._seen_through = rnd
-
         # 7. frontier commit: the round's deltas (fetch_log status updates +
         # frontier_inserts) ARE the commit — per-round bytes written scale
-        # with the round, not the frontier. Every cfg.frontier_compact_every
-        # rounds the latest-wins view is compacted into a full snapshot so
-        # reconstruction depth stays bounded (and old deltas become
-        # expirable) — the seen-keys BASE is refolded from it and the
-        # pending base+tail are rebased from it (the only O(frontier)
-        # shuffles in the cycle, amortized over k rounds; the rebase also
-        # bounds the pending cache's plan lineage at k joins).
-        if compacting:
+        # with the round, not the frontier — and the round joins the cache's
+        # tail. Every cfg.frontier_compact_every rounds the latest-wins view
+        # is compacted into a full snapshot so reconstruction depth stays
+        # bounded (and old deltas become expirable), and the frontier cache
+        # is rebased from it: the one O(frontier) shuffle in the cycle,
+        # amortized over k rounds.
+        if rnd % max(1, cfg.frontier_compact_every) == 0:
             snapshot = store.write_table(
                 self.spark, rnd, "frontier", self.frontier_at(rnd)
             )
-            self._set_seen_base(snapshot.select("url_canon"))
-            self._seen_tail_rounds = []
-            self._rebase_pending(snapshot.filter(F.col("status") == "pending"), rnd)
-            _mark("compact frontier snapshot + refold seen base + rebase pending")
+            self._rebase(snapshot, rnd)
+            _mark("compact frontier snapshot + rebase the frontier cache")
+        else:
+            self._tail_rounds.append(rnd)
 
         # counters were observed during the two writes above — no rescans
         counters = {
@@ -1166,12 +1053,16 @@ class CrawlEngine:
         from .maintenance import reset as _reset
 
         _reset(self.store)
-        self._drop_pending_caches()
-        if self._seen_base is not None:
-            self._seen_base.unpersist()
-        self._seen_base = None
-        self._seen_tail_rounds = []
-        self._seen_through = None
+        self._drop_frontier()
+
+    def close(self) -> None:
+        """Release what the engine persists: the frontier cache and the
+        robots dim. Call it when the engine is done; a later round rebuilds
+        the frontier cache, but the robots dim is then recomputed on each
+        use. Spark keys cached frames by plan, so engines on the same
+        workdir share these entries: closing one releases them for all."""
+        self._drop_frontier()
+        self.robots_dim.unpersist()
 
     def overview(self) -> DataFrame:
         """3.3 analog of GET /api/sites/overview (index.ts:399-425): one row

@@ -212,20 +212,32 @@ class TestDequeue:
         base.unpersist()
 
     def test_base_tail_plan_is_group_limit_then_top_k(self, spark):
-        """The per-round dequeue plan on the engine's cache layout (a
-        url_canon-partitioned persisted base, advanced by a broadcast
-        anti-join, plus a tail): a map-side ``WindowGroupLimit Partial``
-        before the per-host Exchange, a ``TakeOrderedAndProject`` cap, and
-        no single-partition Exchange — no task ever sees every survivor."""
-        f = self._frontier(spark, n_hot=3000, n_cold=50)
+        """The per-round dequeue plan on the engine's input (the pending
+        rows of a url_canon-partitioned persisted frontier base, and the
+        tail's pending inserts, each minus the keys the tail's rounds
+        fetched): a map-side ``WindowGroupLimit Partial`` before the
+        per-host Exchange, a ``TakeOrderedAndProject`` cap, and no
+        single-partition Exchange — no task ever sees every survivor."""
+        from sitemap_scan_spark.operators.urlseen import exact_anti_join
+
+        f = self._frontier(spark, n_hot=3000, n_cold=50).withColumn(
+            "status",
+            F.when(F.col("url_canon").endswith("7"), "fetched").otherwise("pending"),
+        )
         base = f.repartition(8, "url_canon").persist()
         base.count()
-        taken = f.filter(F.col("url_canon").rlike("p00[0-3]")).select("url_canon")
-        advanced = base.join(F.broadcast(taken), "url_canon", "left_anti")
-        tail = f.filter(F.col("url_canon").rlike("p000[0-4]")).withColumn(
+        inserts = f.filter(F.col("url_canon").rlike("p000[0-4]")).withColumn(
             "url_canon", F.concat("url_canon", F.lit("/t"))
         )
-        dq = dequeue([advanced, tail], base_budget=10, round_size=8)
+        taken = f.unionByName(inserts).filter(
+            F.col("url_canon").rlike("p00[0-3]|p0000/t")
+        )
+        pending = F.col("status") == "pending"
+        parts = [
+            exact_anti_join(base.filter(pending), taken),
+            exact_anti_join(inserts.filter(pending), taken),
+        ]
+        dq = dequeue(parts, base_budget=10, round_size=8)
         got = sorted((r.rank, r.url_canon) for r in dq.collect())
         dq.unpersist()
         # the plan of the same query uncached (a persisted frame's own plan
@@ -237,45 +249,14 @@ class TestDequeue:
         assert "WindowGroupLimit" in plan[plan.rfind("\n", 0, partial) : partial]
         # the partial limit runs below (i.e. before) the per-host shuffle
         assert plan.index("Exchange hashpartitioning(host") < partial
-        want = dequeue(advanced.unionByName(tail), 10, 8)
+        want = dequeue(
+            exact_anti_join(f.unionByName(inserts).filter(pending), taken), 10, 8
+        )
         assert got == sorted((r.rank, r.url_canon) for r in want.collect())
         assert [rank for rank, _ in got] == list(range(1, 9))
+        assert "https://hot.test/p0000/t" not in {u for _, u in got}
         want.unpersist()
         base.unpersist()
-
-
-class TestBroadcastKeyCap:
-    """ADVICE round-4 (medium): _broadcast_key_cap must accept every memory
-    string Spark itself accepts — two-letter suffixes ('8gb'), bare numbers
-    (MiB per JVM semantics) — and fall back to the 1g default rather than
-    raise mid-round on anything unparseable."""
-
-    def _cap(self, mem):
-        from types import SimpleNamespace
-
-        from sitemap_scan_spark.plans.rounds import CrawlEngine
-
-        fake = SimpleNamespace(
-            spark=SimpleNamespace(conf=SimpleNamespace(get=lambda k, d=None: mem))
-        )
-        return CrawlEngine._broadcast_key_cap(fake)
-
-    def test_suffix_forms(self):
-        base = self._cap("8g")
-        assert self._cap("8gb") == base == self._cap("8G") == self._cap("8GB")
-        assert self._cap("512m") == self._cap("512mb")
-
-    def test_bare_number_is_mib(self):
-        assert self._cap("8192") == self._cap("8g")
-
-    def test_garbage_falls_back_to_1g_default(self):
-        onegig = self._cap("1g")
-        for bad in ("watermelon", "", None, "gb8", "1.2.3g"):
-            assert self._cap(bad) == onegig
-
-    def test_floor_and_ceiling(self):
-        assert self._cap("64m") == 1_000_000       # floor
-        assert self._cap("100t") == 32_000_000     # ceiling
 
 
 class TestWallClockPoliteness:
@@ -472,57 +453,95 @@ class TestCanonicalizeUdfNulls:
         assert sorted(v for v in vals if v) == ["https://ok.test/a"]
 
 
+def _cache_engine(spark, tmp_path):
+    """An engine on a 10-host generated corpus whose crawl spans several
+    compaction cycles (compact every 3 rounds), plus its seeds."""
+    from sim.genpages import generate
+    from sitemap_scan_spark.plans.rounds import CrawlEngine
+
+    corpus = str(tmp_path / "corpus")
+    if not (tmp_path / "corpus").exists():
+        generate(corpus, n_hosts=10, mean_pages=30, n_seeds=3, seed=11)
+    cfg = CrawlConfig(
+        base_host_budget=4, round_size=60, max_rounds=8,
+        frontier_compact_every=3,
+    )
+    eng = CrawlEngine(
+        spark, spark.read.parquet(f"{corpus}/pages.parquet"), cfg,
+        str(tmp_path / "wd"),
+    )
+    return eng, spark.read.parquet(f"{corpus}/seeds.parquet")
+
+
 class TestPendingCacheLineage:
     def test_pending_lineage_bounded_by_compaction(self, spark, tmp_path):
-        """ADVICE round-3 (unbounded pending-cache lineage): the advance
-        chain must REBASE at every compaction — the base's logical plan
-        holds at most ~compact_every anti-joins, and the join count must
-        RESET after a compaction round instead of growing monotonically
-        (previously O(rounds): O(R²) Catalyst analysis over a crawl and an
-        eventual driver StackOverflowError)."""
-        from sim.genpages import generate
-        from sitemap_scan_spark.config import CrawlConfig
-        from sitemap_scan_spark.plans.rounds import CrawlEngine
-
-        corpus = str(tmp_path / "corpus")
-        generate(corpus, n_hosts=10, mean_pages=30, n_seeds=3, seed=11)
-        pages = spark.read.parquet(f"{corpus}/pages.parquet")
-        seeds = spark.read.parquet(f"{corpus}/seeds.parquet")
-        cfg = CrawlConfig(
-            base_host_budget=4, round_size=60, max_rounds=8,
-            frontier_compact_every=3,
-        )
-        eng = CrawlEngine(spark, pages, cfg, str(tmp_path / "wd"))
+        """ADVICE round-3 (unbounded cache lineage): the dequeue input's
+        plan must not grow with the crawl. The joins in it depend only on
+        the round's position in the compaction cycle — none right after a
+        compaction (empty tail), one anti-join per part otherwise — so
+        round 4 looks like round 1, round 5 like round 2, … (an advance
+        chain growing with every round risked O(R²) Catalyst analysis and
+        a driver StackOverflowError)."""
+        eng, seeds = _cache_engine(spark, tmp_path)
         eng.init_frontier(seeds)
 
-        def joins_in_base():
-            plan = eng._pending_base._jdf.queryExecution().optimizedPlan().toString()
-            return plan.count("Join")
+        def joins_in_dequeue_input(rnd):
+            return sum(
+                p._jdf.queryExecution().optimizedPlan().toString().count("Join")
+                for p in eng._pending_parts(rnd)
+            )
 
         depths = {}
         for rnd in range(1, 9):
             if eng.run(seeds, max_rounds=rnd) == []:
                 break
-            depths[rnd] = joins_in_base()
-        assert depths, "crawl never ran"
-        k = cfg.frontier_compact_every
-        # the invariant: plan complexity is a function of the POSITION in
-        # the compaction cycle only — round 4 must look like round 1, round
-        # 5 like round 2, … (the old design grew monotonically with rnd)
+            depths[rnd] = joins_in_dequeue_input(rnd)
+        k = eng.cfg.frontier_compact_every
+        assert len(depths) > k + 1, depths  # the crawl spans a compaction
         by_pos: dict[int, set[int]] = {}
         for rnd, d in depths.items():
             by_pos.setdefault(rnd % k, set()).add(d)
         for pos, ds in by_pos.items():
             assert len(ds) == 1, (pos, depths)
-        compacted = by_pos.get(0)
-        if compacted and len(by_pos) > 1:
-            assert min(compacted) <= min(min(v) for p, v in by_pos.items() if p != 0), depths
+        assert by_pos[0] == {0}, depths
+        assert all(ds == {2} for pos, ds in by_pos.items() if pos != 0), depths
+
+
+class TestFrontierCache:
+    def test_one_persisted_frontier_after_resume_and_compaction(self, spark, tmp_path):
+        """A resumed engine's first round and a compacting round each leave
+        the engine holding exactly two persisted frames: the robots dim and
+        ONE frontier cache (no separate pending and seen caches)."""
+        from pyspark.sql import DataFrame
+        from pyspark.storagelevel import StorageLevel
+
+        first, seeds = _cache_engine(spark, tmp_path)
+        first.run(seeds, max_rounds=1)
+        first.close()
+
+        eng, seeds = _cache_engine(spark, tmp_path)
+
+        def persisted():
+            return {
+                name
+                for name, v in vars(eng).items()
+                if isinstance(v, DataFrame) and v.storageLevel != StorageLevel.NONE
+            }
+
+        assert len(eng.run(seeds, max_rounds=2)) == 1  # resumed at round 2
+        assert persisted() == {"robots_dim", "_frontier"}
+        assert eng._tail_rounds == [2]
+        assert len(eng.run(seeds, max_rounds=3)) == 1  # 3 % compact_every == 0
+        assert persisted() == {"robots_dim", "_frontier"}
+        assert eng._frontier_round == 3 and eng._tail_rounds == []
+        eng.close()
 
 
 class TestFailurePathRobustness:
-    """Unhappy and early paths of the engine: the dequeue's persisted fetch
-    set is released when the round fails, and the read API answers before
-    the first round commits."""
+    """Unhappy, early and final paths of the engine: the dequeue's
+    persisted fetch set is released when the round fails, the read API
+    answers before the first round commits, and close() releases what the
+    engine persists."""
 
     def _corpus(self, path):
         import os
@@ -577,8 +596,8 @@ class TestFailurePathRobustness:
     def test_dequeue_released_when_fetch_log_write_raises(self, spark, tmp_path):
         """The fetch_log write fails after its job ran (the persisted
         dequeue result is materialized by then): the round must propagate
-        the error and leave no persisted RDD behind beyond the engine's own
-        pending and seen caches."""
+        the error and leave no persisted RDD behind beyond the engine's one
+        frontier cache."""
         from sitemap_scan_spark.plans.checkpoint import RoundStore
 
         eng = self._engine(spark, tmp_path)
@@ -596,13 +615,8 @@ class TestFailurePathRobustness:
         with pytest.raises(RuntimeError, match="fetch_log write failed"):
             eng.run_round(1)
         leaked = set(jsc.getPersistentRDDs().keySet()) - before
-        own = [
-            c
-            for c in (eng._pending_base, eng._pending_tail, eng._seen_base)
-            if c is not None
-        ]
-        assert eng._pending_base is not None  # the round got past the dequeue
-        assert len(leaked) == len(own), (leaked, len(own))
+        assert eng._frontier is not None  # the round got past the dequeue
+        assert len(leaked) == 1, leaked  # the frontier cache only
 
     def test_read_api_before_first_round(self, spark, tmp_path):
         """Right after init_frontier: crawl_order() and fetch_log() are
@@ -617,3 +631,15 @@ class TestFailurePathRobustness:
         assert log.count() == 0
         seen = [tuple(r) for r in eng.url_seen().collect()]
         assert seen == [("https://h.test/b", 0, "robots_blocked")]
+
+    def test_close_releases_persisted_frames(self, spark, tmp_path):
+        """After close() the robots dim and the frontier cache report
+        storage level NONE."""
+        from pyspark.storagelevel import StorageLevel
+
+        eng = self._engine(spark, tmp_path)
+        eng.run_round(1)
+        frames = [eng.robots_dim, eng._frontier]
+        assert all(f.storageLevel != StorageLevel.NONE for f in frames)
+        eng.close()
+        assert [f.storageLevel for f in frames] == [StorageLevel.NONE] * 2

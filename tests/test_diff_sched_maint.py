@@ -321,6 +321,29 @@ class TestMaintenance:
         assert left == ["https://b.test/1"]
 
 
+    def test_single_path_read_infers_when_footer_lacks_column(self, spark, tmp_path):
+        """A declared-schema read null-fills columns its files lack, so a
+        one-path read of an older round whose files predate a cached column
+        must infer the schema from the footer instead."""
+        import os
+
+        from sitemap_scan_spark.plans.checkpoint import RoundStore
+
+        store = RoundStore(str(tmp_path / "rounds"))
+        spark.createDataFrame([("https://a/1",)], "url_canon string").write.parquet(
+            os.path.join(store._dir(0), "frontier")
+        )
+        store.write_table(
+            spark,
+            1,
+            "frontier",
+            spark.createDataFrame([("https://a/2", "pending")], "url_canon string, status string"),
+        )
+        old = store.read_table(spark, 0, "frontier")
+        assert old.columns == ["url_canon"]
+        assert [tuple(r) for r in old.collect()] == [("https://a/1",)]
+
+
 class TestStructure:
     def test_counts_and_extracts(self, spark):
         from sitemap_scan_spark.functions.structure import (

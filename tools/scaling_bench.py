@@ -97,17 +97,16 @@ def run_crawl(cores: int, rounds: int, tag: str, trials: int) -> dict:
             p = os.path.join(workdir, f)
             if os.path.exists(p):
                 os.remove(p)
-        # drop the previous trial's persisted caches (pending base/tail,
-        # seen base): CacheManager entries are not GC'd with the engine
-        # object, and letting them accumulate makes later trials pay
-        # eviction churn the first trial didn't
-        spark.catalog.clearCache()
         eng = CrawlEngine(spark, pages, cfg, workdir)
         eng.init_frontier(seeds)  # discovery outside the timed window
         t0 = time.time()
         stats = eng.run(seeds)
         secs = time.time() - t0
         n = sum(s["n_taken"] for s in stats)
+        # release the trial's persisted caches: CacheManager entries are
+        # not GC'd with the engine object, and letting them accumulate
+        # makes later trials pay eviction churn the first trial didn't
+        eng.close()
         if best is None or secs < best["secs"]:
             best = {"rounds": len(stats), "urls": n, "secs": round(secs, 2)}
             order = [
