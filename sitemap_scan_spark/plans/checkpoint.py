@@ -11,7 +11,9 @@ Layout::
                              (rank/host/crawl_delay ride along — crawl_order
                              is a projection, not a table)
         frontier_inserts/    this round's newly-inserted URLs (delta)
-        host_state/          wall-clock politeness dim (delayed hosts only)
+        host_state/          wall-clock politeness dim: sleeping host →
+                             next_eligible_round, pyarrow-written, at most
+                             round_size × ceil(max_delay / period) rows
         (url_seen is DERIVED at read time from fetch_log +
          frontier_inserts deltas — no dedicated table is written)
         _manifest.json       committed LAST — counters, row counts,
@@ -102,9 +104,6 @@ class RoundStore:
             ],
         }
 
-    def table_rows(self, rnd: int, name: str) -> int:
-        return sum(p["rows"] for p in self.table_lineage(rnd, name)["partitions"])
-
     def commit_manifest(self, rnd: int, counters: dict) -> dict:
         """Write the manifest LAST — the atomic commit marker for a round
         whose tables were streamed out with write_table()."""
@@ -135,9 +134,9 @@ class RoundStore:
         return os.path.exists(os.path.join(self._dir(rnd), name, "_SUCCESS"))
 
     def write_local_table(self, rnd: int, name: str, table) -> None:
-        """Write a TINY dim table (e.g. the sleeping-hosts politeness dim —
-        bounded by delayed hosts, broadcast-sized by construction) straight
-        from the driver via pyarrow: zero Spark jobs, same on-disk layout
+        """Write a small table (e.g. the sleeping-hosts politeness dim,
+        bounded by the hosts fetched in its last few rounds) straight from
+        the driver via pyarrow: zero Spark jobs, same on-disk layout
         (a directory of .parquet files) as write_table, so has_table /
         table_lineage / manifest commits treat it identically."""
         import shutil as _shutil

@@ -51,6 +51,17 @@ FRONTIER_SCHEMA = (
 )
 
 
+def _observe_inserts(rows: DataFrame, obs: Observation) -> DataFrame:
+    """``rows`` (gated frontier rows) with their count (``n_new``) and
+    robots-blocked count (``n_blocked``) observed into ``obs`` by the job
+    that writes them — no extra pass."""
+    return rows.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_new"),
+        F.sum((F.col("status") == "robots_blocked").cast("long")).alias("n_blocked"),
+    )
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -82,12 +93,6 @@ class CrawlEngine:
         self._frontier: DataFrame | None = None
         self._frontier_round: int | None = None
         self._tail_rounds: list[int] = []
-        # wall-clock politeness dim cache: host → next_eligible_round
-        # (sleeping hosts only — broadcast-sized by construction, so a
-        # driver dict is the right home; persisted per round via pyarrow)
-        self._sleeping: dict[str, int] | None = None
-        self._sleeping_round: int | None = None
-        self._sleeping_oversized_round: int | None = None
         if refresh_pages:
             # the pages table changed underneath (new crawl epoch) —
             # rebuild the canonicalized materialization
@@ -128,31 +133,22 @@ class CrawlEngine:
 
     def _wallclock_politeness_on(self) -> bool:
         """True iff some host's crawl_delay exceeds the round period — only
-        then is the per-round host_state dim maintained (zero extra jobs per
-        round otherwise). Probed once per engine instance."""
+        then is the per-round host_state dim read and written (no upkeep
+        per round otherwise). Probed once per engine instance."""
         if self._any_delayed is None:
             self._any_delayed = not self.robots_dim.filter(
                 F.col("crawl_delay") > self.cfg.round_period()
             ).isEmpty()
         return self._any_delayed
 
-    # sleeping-hosts dicts beyond this row count stay DISTRIBUTED: the
-    # driver-dict politeness dim is broadcast-sized for any sane config,
-    # but a pathological one (millions of hosts all slower than the round
-    # period) must degrade to the old distributed-dim path instead of
-    # serializing a giant LocalRelation through py4j every round.
-    SLEEP_DICT_CAP = 1_000_000
-
-    def _host_state(self, rnd: int) -> dict[str, int] | None:
+    def _host_state(self, rnd: int) -> dict[str, int]:
         """The wall-clock politeness dim as of round ``rnd``:
         {host: next_eligible_round} for hosts still sleeping off a
-        crawl_delay > round_period. Tiny by construction (delayed hosts
-        only — the engine broadcasts it into the dequeue anyway, so it is
-        broadcast-sized by definition): it lives as a DRIVER DICT, is
-        persisted per round via a zero-job pyarrow write, and its per-round
-        maintenance costs zero Spark job launches (it used to be a
-        groupBy+union+write job plus a read-back — pure fixed cost in the
-        small-round regime).
+        crawl_delay > round_period; {} when no round has one. It lives on
+        disk only and is read with pyarrow (zero Spark jobs). Its size is
+        bounded by round_size × ceil(max_crawl_delay / round_period): a
+        sleeping host was fetched in one of the last ceil(d/T) rounds, and
+        each round fetches at most round_size URLs.
 
         Walks BACK to the most recent committed round <= rnd that carries
         the table: discovery_refresh commits a round without host_state,
@@ -160,35 +156,16 @@ class CrawlEngine:
         (next_eligible_round is an absolute round number, exactly like the
         oracle's run-scoped ``next_eligible`` dict, so the comparison stays
         correct across intervening refresh rounds)."""
-        if self._sleeping_round == rnd:
-            return self._sleeping
-        state: dict[str, int] | None = None
-        self._sleeping_oversized_round = None
         for r in range(rnd, -1, -1):
             if self.store.has_table(r, "host_state"):
-                if self.store.table_rows(r, "host_state") > self.SLEEP_DICT_CAP:
-                    # footer row count only — the oversized dim never
-                    # reaches the driver; run_round joins it distributed
-                    import logging
-
-                    logging.getLogger(__name__).warning(
-                        "host_state round %d exceeds SLEEP_DICT_CAP=%d; "
-                        "falling back to the distributed politeness dim",
-                        r,
-                        self.SLEEP_DICT_CAP,
-                    )
-                    self._sleeping_oversized_round = r
-                    break
                 t = self.store.read_local_table(r, "host_state")
-                state = dict(
+                return dict(
                     zip(
                         t.column("host").to_pylist(),
                         t.column("next_eligible_round").to_pylist(),
                     )
                 )
-                break
-        self._sleeping, self._sleeping_round = state, rnd
-        return state
+        return {}
 
     def _build_robots_dim(self) -> DataFrame:
         """Parse robots.txt rows into the per-host rules dim
@@ -341,15 +318,9 @@ class CrawlEngine:
             self.spark,
             0,
             "frontier",
-            frontier.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("status") == "robots_blocked").cast("long")).alias(
-                    "n_blocked"
-                ),
-            ),
+            _observe_inserts(frontier, obs),
         )
-        n = int(obs.get["n"] or 0)
+        n = int(obs.get["n_new"] or 0)
         n_blocked = int(obs.get["n_blocked"] or 0)
         self.store.commit_manifest(
             0,
@@ -624,31 +595,23 @@ class CrawlEngine:
             new_rows = self._gate_inserts(
                 fresh.select("url_canon", "depth", "priority"), new_round
             )
+            # counters ride the inserts write as observed metrics, and the
+            # frontier size advances arithmetically, as in run_round;
+            # blocked inserts are seen-but-never-pending, so they must not
+            # inflate the pending counter run() terminates on
+            obs = Observation()
             self.store.begin_round(new_round)
             new_rows = self.store.write_table(
-                self.spark, new_round, "frontier_inserts", new_rows
+                self.spark,
+                new_round,
+                "frontier_inserts",
+                _observe_inserts(new_rows, obs),
             )
             merged = frontier.unionByName(new_rows)
             self.store.write_table(self.spark, new_round, "frontier", merged)
-            n_new = self.store.table_rows(new_round, "frontier_inserts")
-            # blocked inserts are seen-but-never-pending: count them from the
-            # delta's parquet footer (same pattern as run_round) so the
-            # arithmetic pending counter can't inflate and stall run()'s
-            # early-termination
-            import collections
-
-            import pyarrow.parquet as pq
-
-            ins_status = collections.Counter(
-                pq.read_table(
-                    os.path.join(self.store._dir(new_round), "frontier_inserts"),
-                    columns=["status"],
-                )["status"].to_pylist()
-            )
-            n_blocked_new = ins_status.get("robots_blocked", 0)
-            prev_pending = self.store.read_manifest(latest)["counters"].get(
-                "n_pending_after", 0
-            )
+            n_new = int(obs.get["n_new"] or 0)
+            n_blocked_new = int(obs.get["n_blocked"] or 0)
+            prev = self.store.read_manifest(latest)["counters"]
             self.store.commit_manifest(
                 new_round,
                 {
@@ -657,8 +620,8 @@ class CrawlEngine:
                     "n_taken": 0,
                     "n_new": n_new,
                     "n_blocked": n_blocked_new,
-                    "n_pending_after": (prev_pending or 0) + n_new - n_blocked_new,
-                    "frontier_size": self.store.table_rows(new_round, "frontier"),
+                    "n_pending_after": prev["n_pending_after"] + n_new - n_blocked_new,
+                    "frontier_size": prev["frontier_size"] + n_new,
                 },
             )
 
@@ -786,15 +749,6 @@ class CrawlEngine:
         manifest commit (last) makes the round visible."""
         cfg = self.cfg
         t0 = time.time()
-        _tm = [time.time()]
-        _timing = os.environ.get("SSC_TIMING") == "1"
-
-        def _mark(label: str) -> None:
-            if _timing:
-                now = time.time()
-                print(f"[timing r{rnd}] {label}: {now - _tm[0]:.2f}s", flush=True)
-                _tm[0] = now
-
         store = self.store
         store.begin_round(rnd)
         # 1. robots gating happened at insert (status + crawl_delay live in
@@ -804,35 +758,17 @@ class CrawlEngine:
         eligible_parts = self._pending_parts(rnd - 1)
         period = cfg.round_period()
         wallclock = self._wallclock_politeness_on()
-        prev_host_state = self._host_state(rnd - 1) if wallclock else None
-        big_sleep_round = self._sleeping_oversized_round if wallclock else None
-        sleeping_now = {
-            h: nr for h, nr in (prev_host_state or {}).items() if nr > rnd
-        }
-        if big_sleep_round is not None:
-            # distributed fallback (SLEEP_DICT_CAP exceeded — logged in
-            # _host_state): the dim is joined as a table; the base part
-            # loses its cached partitioning for this round, which is the
-            # graceful degradation the driver-dict path replaced
-            sleeping_df = (
-                store.read_table(self.spark, big_sleep_round, "host_state")
-                .filter(F.col("next_eligible_round") > rnd)
-                .select("host")
-            )
-            eligible_parts = [
-                p.join(sleeping_df, "host", "left_anti") for p in eligible_parts
-            ]
-        elif sleeping_now:
-            sleeping = self.spark.createDataFrame(
-                [(h,) for h in sorted(sleeping_now)], "host string"
-            )
-            # broadcast anti over a LocalRelation — narrow (no job to
-            # materialize the build side), so the base part keeps its
-            # url_canon partitioning into the dequeue's map-side group limit
-            eligible_parts = [
-                p.join(F.broadcast(sleeping), "host", "left_anti")
-                for p in eligible_parts
-            ]
+        sleeping_now: dict[str, int] = {}
+        if wallclock:
+            sleeping_now = {
+                h: nr for h, nr in self._host_state(rnd - 1).items() if nr > rnd
+            }
+        if sleeping_now:
+            # a narrow NOT IN filter (no job, no exchange): the base part
+            # keeps its url_canon partitioning into the dequeue's map-side
+            # group limit
+            awake = ~F.col("host").isin(sorted(sleeping_now))
+            eligible_parts = [p.filter(awake) for p in eligible_parts]
 
         # 2-3. politeness dequeue: per-host window (map-side group limit
         # before the per-host shuffle) + top-k cap. The ≤ round_size taken
@@ -849,57 +785,13 @@ class CrawlEngine:
             fetch_log, fetch_counts = self._fetch(rnd, dq)
         finally:
             dq.unpersist()
-        if wallclock and big_sleep_round is not None:
-            # distributed carry-forward twin of the driver-dict path below:
-            # still-sleeping rows ∪ this round's hits (nr = rnd +
-            # ceil(min_delay/period)), newest round wins per host
-            hit_df = (
-                fetch_log.filter(F.col("crawl_delay") > period)
-                .groupBy("host")
-                .agg(F.min("crawl_delay").alias("_d"))
-                .select(
-                    "host",
-                    (F.lit(rnd) + F.ceil(F.col("_d") / F.lit(period)))
-                    .cast("int")
-                    .alias("next_eligible_round"),
-                )
-            )
-            still = (
-                store.read_table(self.spark, big_sleep_round, "host_state")
-                .filter(F.col("next_eligible_round") > rnd)
-            )
-            store.write_table(
-                self.spark,
-                rnd,
-                "host_state",
-                still.unionByName(hit_df)
-                .groupBy("host")
-                .agg(F.max("next_eligible_round").alias("next_eligible_round")),
-            )
-            # footer row count (metadata only): if the dim shrank back
-            # under the cap, the next round returns to the zero-job
-            # driver-dict path instead of staying distributed forever
-            if store.table_rows(rnd, "host_state") > self.SLEEP_DICT_CAP:
-                self._sleeping, self._sleeping_round = None, rnd
-                self._sleeping_oversized_round = rnd
-            else:
-                t = store.read_local_table(rnd, "host_state")
-                self._sleeping = dict(
-                    zip(
-                        t.column("host").to_pylist(),
-                        t.column("next_eligible_round").to_pylist(),
-                    )
-                )
-                self._sleeping_round = rnd
-                self._sleeping_oversized_round = None
-        elif wallclock:
+        if wallclock:
             # hosts hit this round with delay > period sleep ceil(d/T)-1
             # rounds; carry forward still-sleeping hosts, newest round wins.
             # Computed DRIVER-side from the just-written fetch_log delta:
             # a column-pruned pyarrow read of (host, crawl_delay) — the
-            # delta is round-sized and local — replaces a per-round
-            # groupBy+union+write Spark job with zero launches; the dim
-            # stays bounded by delayed hosts (broadcast-sized).
+            # delta is round-sized and local — so the upkeep launches no
+            # Spark job.
             import math
 
             import pyarrow as pa
@@ -930,16 +822,6 @@ class CrawlEngine:
                     }
                 ),
             )
-            if len(new_state) > self.SLEEP_DICT_CAP:
-                # grew past the cap in-process: drop the dict so the next
-                # round gates distributed (the pyarrow write above is fine
-                # at any size — only the py4j LocalRelation is not)
-                self._sleeping, self._sleeping_round = None, rnd
-                self._sleeping_oversized_round = rnd
-            else:
-                self._sleeping, self._sleeping_round = new_state, rnd
-                self._sleeping_oversized_round = None
-        _mark("dequeue+fetch+parse+write fetch_log")
 
         # 5/6. candidate links (_candidates), exact anti-join vs the whole
         # frontier → this round's inserts
@@ -958,18 +840,12 @@ class CrawlEngine:
             self.spark,
             rnd,
             "frontier_inserts",
-            self._gate_inserts(
-                fresh.select("url_canon", "depth", "priority"), rnd
-            ).observe(
+            _observe_inserts(
+                self._gate_inserts(fresh.select("url_canon", "depth", "priority"), rnd),
                 obs_ins,
-                F.count(F.lit(1)).alias("n_new"),
-                F.sum((F.col("status") == "robots_blocked").cast("long")).alias(
-                    "n_blocked"
-                ),
             ),
         )
         ins_counts = obs_ins.get
-        _mark("candidates+anti-join+write inserts")
 
         # (url_seen is DERIVED from fetch_log + frontier_inserts at read
         # time — see url_seen(); no separate per-round write)
@@ -987,7 +863,6 @@ class CrawlEngine:
                 self.spark, rnd, "frontier", self.frontier_at(rnd)
             )
             self._rebase(snapshot, rnd)
-            _mark("compact frontier snapshot + rebase the frontier cache")
         else:
             self._tail_rounds.append(rnd)
 
@@ -1012,7 +887,6 @@ class CrawlEngine:
             counters["n_taken"] / max(counters["secs"], 1e-9), 1
         )
         store.commit_manifest(rnd, counters)
-        _mark("counters+manifest")
         return counters
 
     # ------------------------------------------------------------------- run

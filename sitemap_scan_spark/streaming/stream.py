@@ -188,21 +188,21 @@ def change_notification_sink(
     if deliver is not None:
         # Delivery contract (at-least-once): a task retry or speculative
         # attempt RE-DELIVERS the rows its partition already posted, so
-        # receivers must dedupe on (url_canon, round, new_hash). And
-        # because deliver runs in a pickled copy on the worker, a closure
-        # that mutates driver state (the old contract, e.g. list.append)
-        # would silently write to the copy — fail fast AT SINK
-        # CONSTRUCTION on closures cloudpickle cannot ship, not hours in
-        # when the first change-bearing batch arrives.
+        # receivers must dedupe on (url_canon, round, new_hash). deliver
+        # runs in a pickled copy on the worker: a closure that mutates
+        # driver state (e.g. list.append) pickles fine, but it only
+        # mutates the worker's copy, so deliver must hand its rows to
+        # something outside the process (a webhook, a file, a queue).
+        # The check below catches only callables cloudpickle cannot ship,
+        # at sink construction rather than at the first change-bearing
+        # batch.
         from pyspark import cloudpickle
 
         try:
             cloudpickle.dumps(deliver)
         except Exception as e:
             raise TypeError(
-                "deliver must be picklable (it runs executor-side; "
-                "driver-state closures are silently ineffective): "
-                f"{e}"
+                f"deliver must be picklable (it runs executor-side): {e}"
             ) from e
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:

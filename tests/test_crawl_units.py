@@ -359,38 +359,56 @@ class TestWallClockPoliteness:
         )
         assert got_seen == want_seen
 
-    def test_oversized_sleeping_dim_falls_back_distributed(self, spark, tmp_path):
-        """Round-5 VERDICT finding 2: above SLEEP_DICT_CAP the politeness
-        dim must stay distributed (no driver dict / LocalRelation). Forcing
-        the cap to 0 routes every round through the fallback — the crawl
-        order must be IDENTICAL to the driver-dict path's oracle parity."""
-        import pandas as pd
-
-        from sim.oracle import OracleCrawler
-        from sitemap_scan_spark.plans.rounds import CrawlEngine
+    def test_sleep_gate_keeps_group_limit_plan(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A round with a sleeping host gates it with a narrow NOT IN filter
+        on host: the round's dequeue plan builds no broadcast and scans no
+        driver-built relation, and the map-side ``WindowGroupLimit
+        Partial`` still runs below the per-host Exchange. Compacting every
+        round leaves the persisted base as the round's only pending part,
+        so any broadcast in the plan would be the gate's."""
+        from sitemap_scan_spark.plans import rounds
 
         corpus = str(tmp_path / "corpus")
         self._corpus(corpus)
-        cfg = CrawlConfig(base_host_budget=10, round_size=100, max_rounds=12)
-        eng = CrawlEngine(
+        cfg = CrawlConfig(
+            base_host_budget=10,
+            round_size=100,
+            max_rounds=2,
+            frontier_compact_every=1,
+        )
+        plans = []
+        real_dequeue = rounds.dequeue
+
+        def planned_dequeue(*args, **kwargs):
+            dq = real_dequeue(*args, **kwargs)
+            # the plan of the query itself, not of its (unmaterialized) cache
+            dq.unpersist()
+            plans.append(dq.select("*")._jdf.queryExecution().executedPlan().toString())
+            return dq.persist()
+
+        monkeypatch.setattr(rounds, "dequeue", planned_dequeue)
+        eng = rounds.CrawlEngine(
             spark,
             spark.read.parquet(f"{corpus}/pages.parquet"),
             cfg,
             str(tmp_path / "wd"),
         )
-        eng.SLEEP_DICT_CAP = 0  # every host_state table counts as oversized
         eng.run(spark.read.parquet(f"{corpus}/seeds.parquet"))
-        assert eng._sleeping_oversized_round is not None  # fallback engaged
-        order = [
-            (r.round, r.rank, r.url_canon) for r in eng.crawl_order().collect()
-        ]
-        slow_rounds = sorted(
-            {rnd for rnd, _rk, u in order if u.startswith("https://slow")}
+        assert len(plans) == 2
+        # round 2: slow.test, fetched in round 1, sleeps until round 4
+        plan = plans[1]
+        assert "BroadcastExchange" not in plan
+        assert "Scan ExistingRDD" not in plan
+        assert "slow.test" in plan  # the gate's literal
+        partial = plan.index("Partial")
+        assert "WindowGroupLimit" in plan[plan.rfind("\n", 0, partial) : partial]
+        assert plan.index("Exchange hashpartitioning(host") < partial
+        assert not any(
+            r.url_canon.startswith("https://slow")
+            for r in eng.crawl_order().filter("round = 2").collect()
         )
-        assert slow_rounds == [1, 4, 7, 10]
-        oracle = OracleCrawler(pd.read_parquet(f"{corpus}/pages.parquet"), cfg)
-        res = oracle.crawl(pd.read_parquet(f"{corpus}/seeds.parquet"))
-        assert sorted(order) == sorted(res.crawl_order)
 
     def test_sleep_survives_discovery_refresh(self, spark, tmp_path):
         """Regression (round-3 ADVICE): discovery_refresh commits a round

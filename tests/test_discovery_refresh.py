@@ -105,6 +105,8 @@ def test_lastmod_churn_skips_and_new_loc_discovered(spark):
     man = eng3.store.read_manifest(new_round)["counters"]
     assert man["n_blocked"] == 1
     assert man["n_pending_after"] == 1
+    # the frontier size advances arithmetically, like run_round's
+    assert man["frontier_size"] == frontier.count()
     # url_seen = dequeued ∪ robots_blocked: the blocked insert is seen at
     # the round it was COMMITTED in (new_round, not latest); the pending one
     # is not seen until dequeued
