@@ -38,10 +38,6 @@ class CrawlConfig:
     exclude_patterns: tuple[str, ...] = tuple(DEFAULT_EXCLUDE_PATTERNS)
     sitemap_max_depth: int = 10
     sitemap_max_visited: int = 500
-    # URL shape of sitemap documents — expansion pre-filters the pages scan
-    # to this subset ONCE (cached) instead of rescanning the full corpus at
-    # every recursion level
-    sitemap_url_pattern: str = r"(?i)\.xml$"
     # wall-clock politeness: one round represents this many seconds (the
     # reference's cron tick). crawl_delay ≤ T → floor(T/delay) fetches per
     # round (capped at base_host_budget); crawl_delay > T → the host sleeps

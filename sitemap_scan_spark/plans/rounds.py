@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
-from ..functions.canonicalize import canonicalize_udf, with_resolved_canonical
+from ..functions.canonicalize import canonicalize_udf, host_of_col, with_resolved_canonical
 from ..functions.extract import (
     extract_links_col,
     extract_redirect_col,
@@ -42,7 +42,7 @@ from ..functions.extract import (
 from ..operators.frontier import dequeue
 from ..operators.urlseen import exact_anti_join
 from ..sources.robots import parse_robots_one
-from ..sources.sitemap import expand_sitemaps
+from ..sources.sitemap import canonical_roots, expand_sitemaps, root_sitemap_hashes
 from .checkpoint import RoundStore
 
 FRONTIER_SCHEMA = (
@@ -240,9 +240,7 @@ class CrawlEngine:
         rows (status + crawl_delay + discovered_round)."""
         from ..sources.robots import robots_gate
 
-        with_host = cands.withColumn(
-            "host", F.regexp_extract("url_canon", r"^https?://([^/:?#]+)", 1)
-        )
+        with_host = cands.withColumn("host", host_of_col("url_canon"))
         gated = robots_gate(
             with_host, self.robots_dim.select("host", "disallow", "crawl_delay")
         )
@@ -275,34 +273,23 @@ class CrawlEngine:
             .groupBy("url_canon")
             .agg(F.max("priority").cast("double").alias("priority"))
         )
-        seed_hosts = sorted(
-            r.host
-            for r in seed_canon.select(
-                F.regexp_extract("url_canon", r"^https?://([^/:?#]+)", 1).alias("host")
-            )
+        # one driver collect: each seed host's robots-declared sitemaps, or
+        # the conventional /sitemap.xml when robots.txt declares none
+        hosts = (
+            seed_canon.select(host_of_col("url_canon").alias("host"))
             .distinct()
+            .join(self.robots_dim.select("host", "sitemaps"), "host", "left")
             .collect()
         )
-        robots = {
-            r.host: r
-            for r in self.robots_dim.filter(F.col("host").isin(seed_hosts)).collect()
-        }
-        roots: list[str] = []
-        for h in seed_hosts:
-            rr = robots.get(h)
-            roots.extend(
-                (rr.sitemaps if rr and rr.sitemaps else [f"https://{h}/sitemap.xml"])
-            )
+        roots = [
+            u
+            for r in sorted(hosts, key=lambda r: r.host)
+            for u in (r.sitemaps or [f"https://{r.host}/sitemap.xml"])
+        ]
         locs = expand_sitemaps(self.spark, self.pages_canon, roots, cfg)
 
-        seeds_f = seed_canon.select(
-            "url_canon",
-            F.lit(0).alias("depth"),
-            F.col("priority"),
-        )
-        locs_f = locs.select(
-            "url_canon", F.lit(1).alias("depth"), F.col("priority")
-        )
+        seeds_f = seed_canon.select("url_canon", F.lit(0).alias("depth"), "priority")
+        locs_f = locs.select("url_canon", F.lit(1).alias("depth"), "priority")
         frontier = self._gate_inserts(
             self._exclude_filter(seeds_f.unionByName(locs_f))
             .groupBy("url_canon")
@@ -332,13 +319,14 @@ class CrawlEngine:
         )
         # record discovery watermarks (root list + content/semantic hashes)
         # for refresh_discovery()'s no-rescan logic (T3/T5)
-        from ..functions.canonicalize import canonicalize_one
-
-        canon_roots = sorted(
-            {c for c in (canonicalize_one(r) for r in roots) if c}
-        )
+        canon_roots = canonical_roots(roots)
         self._save_discovery_state(
-            {"roots": canon_roots, "root_hashes": self._root_sitemap_hashes(canon_roots)}
+            {
+                "roots": canon_roots,
+                "root_hashes": root_sitemap_hashes(
+                    self.pages_canon, canon_roots, cfg.sitemap_default_priority
+                ),
+            }
         )
         return {"frontier_size": n}
 
@@ -489,63 +477,6 @@ class CrawlEngine:
                 return json.load(f)
         return {}
 
-    def _root_sitemap_hashes(self, roots: list[str]) -> dict[str, dict]:
-        """Per root sitemap URL: content hash + semantic hash (F21 — sha256
-        of the sorted distinct canonical loc set, fetcher.ts:901-914) of the
-        CURRENT body in pages. One mapInPandas job over the small sitemap
-        subset; only the (url, hash, hash) TRIPLES reach the driver — never
-        the bodies (root sitemaps run to tens of MB each, so collecting
-        bodies would OOM the driver at ~10^4 discovery roots)."""
-        default_priority = self.cfg.sitemap_default_priority
-
-        def hash_batches(batches):
-            import hashlib
-
-            import pandas as pd
-
-            from ..functions.canonicalize import canonicalize_one
-            from ..sources.sitemap import parse_sitemap_one
-
-            for pdf in batches:
-                chs, shs = [], []
-                for h in pdf["html"]:
-                    body = (
-                        h.decode("utf-8", "replace")
-                        if isinstance(h, (bytes, bytearray))
-                        else (h or "")
-                    )
-                    _kind, entries = parse_sitemap_one(body, default_priority)
-                    locs = sorted(
-                        {
-                            c
-                            for c in (canonicalize_one(u) for u, _ in entries)
-                            if c is not None
-                        }
-                    )
-                    chs.append(hashlib.sha256(body.encode()).hexdigest())
-                    shs.append(hashlib.sha256("\n".join(locs).encode()).hexdigest())
-                yield pd.DataFrame(
-                    {"url_canon": pdf["url_canon"], "content_hash": chs,
-                     "semantic_hash": shs}
-                )
-
-        rows = (
-            self.pages_canon.filter(F.col("url_canon").isin(roots))
-            .select("url_canon", "html")
-            .mapInPandas(
-                hash_batches,
-                "url_canon string, content_hash string, semantic_hash string",
-            )
-            .collect()
-        )
-        return {
-            r.url_canon: {
-                "content_hash": r.content_hash,
-                "semantic_hash": r.semantic_hash,
-            }
-            for r in rows
-        }
-
     def refresh_discovery(self) -> dict:
         """T3/T5/S9 analog of the reference's no-rescan logic
         (fetcher.ts:995-1090): re-hash each root sitemap's body; unchanged →
@@ -560,7 +491,9 @@ class CrawlEngine:
         state = self._load_discovery_state()
         roots = sorted(state.get("roots", []))
         stored = state.get("root_hashes", {})
-        current = self._root_sitemap_hashes(roots)
+        current = root_sitemap_hashes(
+            self.pages_canon, roots, self.cfg.sitemap_default_priority
+        )
 
         changed_roots = []
         skipped, lastmod_only = [], []
@@ -580,11 +513,7 @@ class CrawlEngine:
             locs = expand_sitemaps(self.spark, self.pages_canon, changed_roots, self.cfg)
             frontier = self.frontier_at(latest)
             cands = self._exclude_filter(
-                locs.select(
-                    "url_canon",
-                    F.lit(1).alias("depth"),
-                    "priority",
-                )
+                locs.select("url_canon", F.lit(1).alias("depth"), "priority")
             )
             fresh = exact_anti_join(cands, frontier.select("url_canon"))
             # commit as a fresh round so resume semantics stay append-only;

@@ -3,36 +3,40 @@
 Re-expresses the reference's ``parseSitemap`` recursion
 (/root/reference/src/backup/fetcher.ts:916-993: depth ≤ 10, ≤ 500 sitemaps
 visited, cycle set on canonicalized URLs) and its loc/urlset parsing
-(src/backup/sitemap.ts:55-155, fetcher.ts:882-899). The reference recurses
-with await; we expand breadth-first as an iterative driver loop where each
-LEVEL is one distributed join + mapInPandas parse over all hosts at once —
-at 10^10 scale every level is a DataFrame job, never a per-sitemap fetch.
+(src/backup/sitemap.ts:55-155, fetcher.ts:882-899) as a breadth-first
+driver loop where each LEVEL is one distributed job over all hosts at once.
 
-Parsing is regex-based like the reference's loc extraction (no XML dependency
-in this container); bodies are parsed inside Arrow-batched pandas iterators.
+A sitemap is a body with a ``<sitemapindex>`` or ``<urlset>`` root tag
+(CRAWL_SPEC Discovery 3), whatever its URL: the pages scan is prefiltered
+once, JVM-side, by the parser's own root-tag patterns (what it drops, the
+parser would call ``other``). Each level checkpoints its capped batch,
+broadcast-joins it to that cached subset and runs one ``mapInPandas`` that
+decodes, parses and canonicalizes ``(kind, url_canon, priority)`` rows; the
+checkpointed rows feed both the urlset output and the index children.
+Parsing is regex-based like the reference's (no XML dependency here).
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
+from functools import reduce
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..config import CrawlConfig
-from ..functions.canonicalize import canonicalize_one, canonicalize_series
+from ..functions.canonicalize import canonicalize_one, canonicalize_series, host_of_col
 
-_RE_ROOT_URLSET = re.compile(r"<\s*urlset[\s>]", re.I)
-_RE_ROOT_INDEX = re.compile(r"<\s*sitemapindex[\s>]", re.I)
+# root tags; ASCII-only \s and case folding, so the JVM prefilter below
+# (java.util.regex, whose default \s and (?i) are ASCII) means the same
+_ROOT_URLSET = r"<\s*urlset[\s>]"
+_ROOT_INDEX = r"<\s*sitemapindex[\s>]"
+_RE_ROOT_URLSET = re.compile(_ROOT_URLSET, re.I | re.A)
+_RE_ROOT_INDEX = re.compile(_ROOT_INDEX, re.I | re.A)
+_SITEMAP_BODY_RLIKE = f"(?i){_ROOT_INDEX}|{_ROOT_URLSET}"
 _RE_URL_BLOCK = re.compile(r"<url\b.*?</url>", re.S | re.I)
 _RE_SMAP_BLOCK = re.compile(r"<sitemap\b.*?</sitemap>", re.S | re.I)
 _RE_LOC = re.compile(r"<loc>\s*(.*?)\s*</loc>", re.S | re.I)
@@ -67,40 +71,68 @@ def parse_sitemap_one(
     return "other", []
 
 
-_PARSE_SCHEMA = StructType(
-    [
-        StructField("sitemap_url", StringType()),
-        StructField("kind", StringType()),
-        StructField("locs", ArrayType(StringType())),
-        StructField("priorities", ArrayType(DoubleType())),
+def canonical_roots(root_sitemaps: list[str]) -> list[str]:
+    """Sorted distinct canonical forms of the root sitemap URLs."""
+    return sorted({u for u in (canonicalize_one(r) for r in root_sitemaps) if u})
+
+
+def _parse_bodies(
+    html: pd.Series, default_priority: float
+) -> tuple[list[str], pd.DataFrame]:
+    """Decode and parse a batch of sitemap bodies → (the decoded bodies,
+    their entries as ``(doc, kind, url_canon, priority)`` rows), where
+    ``doc`` is the body's position in the batch and every loc is
+    canonicalized in one vectorized pass; invalid locs are dropped."""
+    bodies = [
+        b.decode("utf-8", "replace") if isinstance(b, (bytes, bytearray)) else (b or "")
+        for b in html
     ]
-)
+    rows = []
+    for i, body in enumerate(bodies):
+        kind, found = parse_sitemap_one(body, default_priority)
+        rows.extend((i, kind, loc, pr) for loc, pr in found)
+    entries = pd.DataFrame(rows, columns=["doc", "kind", "url_canon", "priority"])
+    entries["url_canon"] = canonicalize_series(entries["url_canon"])
+    return bodies, entries[entries["url_canon"].notna()]
 
 
-def _parse_batch(default_priority: float):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _sha256(s: str) -> str:
+    return hashlib.sha256(s.encode()).hexdigest()
+
+
+def root_sitemap_hashes(
+    pages_canon: DataFrame, roots: list[str], default_priority: float
+) -> dict[str, dict]:
+    """Per root sitemap URL: content hash + semantic hash (F21 — sha256
+    of the sorted distinct canonical loc set, fetcher.ts:901-914) of the
+    CURRENT body in pages. One mapInPandas job over the roots' pages;
+    only the (url, hash, hash) TRIPLES reach the driver — never the bodies
+    (root sitemaps run to tens of MB each, so collecting bodies would OOM
+    the driver at ~10^4 discovery roots)."""
+
+    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            kinds, locs_col, prios_col = [], [], []
-            for b in pdf["html"]:
-                xml = (
-                    b.decode("utf-8", "replace")
-                    if isinstance(b, (bytes, bytearray))
-                    else (b or "")
-                )
-                kind, entries = parse_sitemap_one(xml, default_priority)
-                kinds.append(kind)
-                locs_col.append([e[0] for e in entries])
-                prios_col.append([e[1] for e in entries])
-            yield pd.DataFrame(
-                {
-                    "sitemap_url": pdf["url_canon"],
-                    "kind": kinds,
-                    "locs": locs_col,
-                    "priorities": prios_col,
-                }
-            )
+            bodies, entries = _parse_bodies(pdf["html"], default_priority)
+            locs = entries.groupby("doc")["url_canon"].unique()
+            pdf["content_hash"] = [_sha256(b) for b in bodies]
+            pdf["semantic_hash"] = [
+                _sha256("\n".join(sorted(locs.get(i, [])))) for i in range(len(bodies))
+            ]
+            yield pdf[["url_canon", "content_hash", "semantic_hash"]]
 
-    return gen
+    rows = (
+        pages_canon.filter(F.col("url_canon").isin(roots))
+        .select("url_canon", "html")
+        .mapInPandas(
+            hash_batches,
+            "url_canon string, content_hash string, semantic_hash string",
+        )
+        .collect()
+    )
+    return {
+        r.url_canon: {"content_hash": r.content_hash, "semantic_hash": r.semantic_hash}
+        for r in rows
+    }
 
 
 def expand_sitemaps(
@@ -113,102 +145,78 @@ def expand_sitemaps(
 
     pages_canon: pages with a ``url_canon`` column (pre-canonicalized scan).
     Returns (url_canon, priority) of every urlset loc discovered, already
-    canonicalized but NOT yet exclude-filtered.
+    canonicalized but NOT yet exclude-filtered, deduplicated keeping the max
+    priority (D7 + D1 semantics). The result reads only checkpointed level
+    rows, so it is returned lazily.
 
     Cycle/depth guards as in the reference: global visited set (anti-join),
     depth ≤ cfg.sitemap_max_depth, ≤ cfg.sitemap_max_visited sitemaps per
-    host (enforced per level, deterministic by url_canon order).
+    host (enforced per level, deterministic by url_canon order). A listed
+    sitemap counts as visited whether or not pages holds its body.
     """
-    roots = sorted({u for u in (canonicalize_one(r) for r in root_sitemaps) if u})
-    if not roots:
-        return spark.createDataFrame([], "url_canon string, priority double")
+    default_priority = cfg.sitemap_default_priority
 
-    # one pass over the corpus to isolate sitemap-shaped URLs; every
-    # recursion level then joins against this small cached subset instead of
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _parse_bodies(pdf["html"], default_priority)[1].drop(columns="doc")
+
+    # one pass over the corpus to isolate sitemap bodies; every recursion
+    # level then joins against this small cached subset instead of
     # rescanning 100 TB of pages per level
     sm_pages = (
-        pages_canon.filter(F.col("url_canon").rlike(cfg.sitemap_url_pattern))
+        pages_canon.filter(F.col("html").cast("string").rlike(_SITEMAP_BODY_RLIKE))
         .select("url_canon", "html")
         .persist()
     )
-
-    to_visit = spark.createDataFrame([(u,) for u in roots], "url_canon string")
+    to_visit = spark.createDataFrame(
+        [(u,) for u in canonical_roots(root_sitemaps)], "url_canon string"
+    )
     visited = spark.createDataFrame([], "url_canon string, host string")
-    results: list[DataFrame] = []
-
-    for _depth in range(cfg.sitemap_max_depth):
-        if to_visit.isEmpty():
-            break
-        # per-host visited cap (reference: ≤500 per site, fetcher.ts:82) —
-        # DISTRIBUTED: rank the level's candidates per host by url_canon and
-        # keep rank + already-visited-count ≤ cap. Equivalent to the scalar
-        # walk in url_canon order (the cap is per host, so global vs per-host
-        # ordering is indistinguishable), with no driver-side collect —
-        # millions of sitemaps per level never leave the executors.
-        lvl = to_visit.withColumn(
-            "host", F.regexp_extract("url_canon", r"^https?://([^/:?#]+)", 1)
-        )
-        counts = visited.groupBy("host").agg(F.count("*").alias("n_seen"))
-        rn = F.row_number().over(Window.partitionBy("host").orderBy("url_canon"))
-        batch = (
-            lvl.withColumn("_rn", rn)
-            .join(counts, "host", "left")
-            .filter(
-                F.col("_rn") + F.coalesce(F.col("n_seen"), F.lit(0))
-                <= cfg.sitemap_max_visited
+    levels = [spark.createDataFrame([], "url_canon string, priority double")]
+    try:
+        for _depth in range(cfg.sitemap_max_depth):
+            # per-host visited cap (reference: ≤500 per site, fetcher.ts:82) —
+            # DISTRIBUTED: rank the level's candidates per host by url_canon
+            # and keep rank + already-visited-count ≤ cap. Equivalent to the
+            # scalar walk in url_canon order (the cap is per host, so global
+            # vs per-host ordering is indistinguishable), with no driver-side
+            # collect — millions of sitemaps per level never leave the
+            # executors.
+            counts = visited.groupBy("host").agg(F.count("*").alias("n_seen"))
+            rn = F.row_number().over(Window.partitionBy("host").orderBy("url_canon"))
+            batch = (
+                to_visit.withColumn("host", host_of_col("url_canon"))
+                .withColumn("_rn", rn)
+                .join(counts, "host", "left")
+                .filter(
+                    F.col("_rn") + F.coalesce(F.col("n_seen"), F.lit(0))
+                    <= cfg.sitemap_max_visited
+                )
+                .select("url_canon", "host")
+                # materialized once: the level's parse, the next level's
+                # anti-join and the visited union all read it
+                .localCheckpoint(eager=True)
             )
-            .select("url_canon", "host")
-            # materialize per level: truncates the union/anti-join lineage
-            # that otherwise deepens every BFS iteration
-            .localCheckpoint(eager=True)
-        )
-        if batch.isEmpty():
-            break
-        visited = visited.unionByName(batch).localCheckpoint(eager=True)
-
-        fetched = batch.select("url_canon").join(sm_pages, "url_canon", "inner").select(
-            "url_canon", "html"
-        )
-        parsed = fetched.mapInPandas(
-            _parse_batch(cfg.sitemap_default_priority), _PARSE_SCHEMA
-        )
-        exploded = parsed.select(
-            "kind",
-            F.explode(F.arrays_zip("locs", "priorities")).alias("e"),
-        ).select(
-            "kind",
-            F.col("e.locs").alias("loc"),
-            F.col("e.priorities").alias("priority"),
-        )
-
-        @F.pandas_udf(StringType())
-        def _canon(u: pd.Series) -> pd.Series:
-            return canonicalize_series(u)
-
-        exploded = exploded.withColumn("url_canon", _canon("loc")).filter(
-            F.col("url_canon").isNotNull()
-        )
-        urls = exploded.filter(F.col("kind") == "urlset").select(
-            "url_canon", "priority"
-        )
-        results.append(urls)
-        children = (
-            exploded.filter(F.col("kind") == "index")
-            .select("url_canon")
-            .distinct()
-            .join(visited.select("url_canon"), "url_canon", "left_anti")
-        )
-        to_visit = children
-
-    if not results:
+            if batch.isEmpty():
+                break
+            visited = visited.unionByName(batch)
+            rows = (
+                F.broadcast(batch.select("url_canon"))
+                .join(sm_pages, "url_canon")
+                .mapInPandas(parse, "kind string, url_canon string, priority double")
+                .localCheckpoint(eager=True)
+            )
+            levels.append(
+                rows.filter(F.col("kind") == "urlset").select("url_canon", "priority")
+            )
+            to_visit = (
+                rows.filter(F.col("kind") == "index")
+                .select("url_canon")
+                .distinct()
+                .join(visited.select("url_canon"), "url_canon", "left_anti")
+            )
+    finally:
         sm_pages.unpersist()
-        return spark.createDataFrame([], "url_canon string, priority double")
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    # dedup locs across sitemaps keeping max priority (D7 + D1 semantics);
-    # materialize before unpersisting the cached sitemap subset
-    final = out.groupBy("url_canon").agg(F.max("priority").alias("priority"))
-    final = final.localCheckpoint(eager=True)
-    sm_pages.unpersist()
-    return final
+    return reduce(lambda a, b: a.unionByName(b), levels).groupBy("url_canon").agg(
+        F.max("priority").alias("priority")
+    )

@@ -119,8 +119,8 @@ class TestSitemapParse:
     def test_garbage(self):
         assert parse_sitemap_one("<html>not a sitemap</html>")[0] == "other"
 
-    def test_cycle_terminates(self, spark):
-        """Mirrors fetcher.spec.ts:65-99 — A→B→A must terminate."""
+    @staticmethod
+    def _cycle_pages(spark):
         rows = [
             ("https://c.test/sitemap.xml", "<sitemapindex><sitemap><loc>https://c.test/a.xml</loc></sitemap></sitemapindex>"),
             ("https://c.test/a.xml", "<sitemapindex><sitemap><loc>https://c.test/b.xml</loc></sitemap></sitemapindex>"),
@@ -128,11 +128,14 @@ class TestSitemapParse:
              "<sitemap><loc>https://c.test/c.xml</loc></sitemap></sitemapindex>"),
             ("https://c.test/c.xml", "<urlset><url><loc>https://c.test/p1</loc></url></urlset>"),
         ]
-        pages = spark.createDataFrame(
+        return spark.createDataFrame(
             [(u, x.encode()) for u, x in rows], "url_canon string, html binary"
         )
+
+    def test_cycle_terminates(self, spark):
+        """Mirrors fetcher.spec.ts:65-99 — A→B→A must terminate."""
         locs = expand_sitemaps(
-            spark, pages, ["https://c.test/sitemap.xml"], CrawlConfig()
+            spark, self._cycle_pages(spark), ["https://c.test/sitemap.xml"], CrawlConfig()
         ).collect()
         assert [r.url_canon for r in locs] == ["https://c.test/p1"]
 
@@ -161,6 +164,171 @@ class TestSitemapParse:
         cfg = CrawlConfig(sitemap_max_visited=4)  # root + 3 children
         locs = expand_sitemaps(spark, pages, ["https://d.test/sitemap.xml"], cfg)
         assert locs.count() == 3
+
+    def test_body_prefilter_keeps_what_the_parser_parses(self, spark):
+        """The JVM-side root-tag prefilter keeps exactly the bodies the
+        Python parser calls a urlset or an index: ASCII whitespace and case
+        folding on both sides, undecodable bytes replaced on both sides."""
+        from sitemap_scan_spark.sources.sitemap import _SITEMAP_BODY_RLIKE
+
+        bodies = [
+            b"<urlset><url><loc>https://a/1</loc></url></urlset>",
+            b"<?xml version='1.0'?>\n< URLSET\txmlns='x'>",
+            b"<\x0bSitemapIndex\r\n>",
+            b"\xff\xfe<urlset>",
+            b"<urlset/>",
+            b"<urlsets>",
+            b"<\xc2\xa0urlset>",  # no-break space is not ASCII whitespace
+            "<urlſet>".encode(),  # long s folds to s only under Unicode rules
+            b"<html><p>urlset sitemapindex</p></html>",
+            b"",
+        ]
+        pages = spark.createDataFrame(
+            [(str(i), b) for i, b in enumerate(bodies)], "url_canon string, html binary"
+        )
+        kept = {
+            int(r.url_canon)
+            for r in pages.filter(
+                F.col("html").cast("string").rlike(_SITEMAP_BODY_RLIKE)
+            ).collect()
+        }
+        parsed = {
+            i
+            for i, b in enumerate(bodies)
+            if parse_sitemap_one(b.decode("utf-8", "replace"))[0] != "other"
+        }
+        assert kept == parsed == {0, 1, 2, 3}
+
+    def test_missing_children_count_toward_cap(self, spark):
+        """A listed child sitemap is visited — and counts toward the
+        per-host cap — even when pages holds no body for it, as in the
+        oracle, which marks a sitemap visited before it looks the body up."""
+        from sim.oracle import OracleCrawler
+
+        root = "https://m.test/sitemap.xml"
+        rows = [
+            (
+                root,
+                "<sitemapindex>"
+                + "".join(
+                    f"<sitemap><loc>https://m.test/s{i}.xml</loc></sitemap>"
+                    for i in range(10)
+                )
+                + "</sitemapindex>",
+            )
+        ] + [  # only the odd children exist
+            (
+                f"https://m.test/s{i}.xml",
+                f"<urlset><url><loc>https://m.test/p{i}</loc></url></urlset>",
+            )
+            for i in range(1, 10, 2)
+        ]
+        pages = spark.createDataFrame(
+            [(u, x.encode()) for u, x in rows], "url_canon string, html binary"
+        )
+        cfg = CrawlConfig(sitemap_max_visited=4)  # root + s0, s1, s2
+        got = {
+            r.url_canon: r.priority
+            for r in expand_sitemaps(spark, pages, [root], cfg).collect()
+        }
+        oracle = OracleCrawler(
+            pd.DataFrame({"url": [u for u, _ in rows], "html": [x for _, x in rows]}),
+            cfg,
+        )
+        assert got == oracle._expand_sitemaps([root]) == {"https://m.test/p1": 0.5}
+
+    def test_non_xml_sitemap_matches_oracle(self, spark, tmp_path):
+        """A sitemap is what its root tag says it is, whatever its URL
+        (CRAWL_SPEC Discovery 3): a robots-declared index at a non-.xml URL,
+        listing a non-.xml urlset, discovers /p2, which no page links to."""
+        import os
+
+        from sim.oracle import OracleCrawler
+        from sitemap_scan_spark.plans.rounds import CrawlEngine
+
+        rows = [
+            ("https://n.test/robots.txt", "User-agent: *\nSitemap: https://n.test/sitemap_index"),
+            (
+                "https://n.test/sitemap_index",
+                "<sitemapindex><sitemap><loc>https://n.test/list</loc></sitemap></sitemapindex>",
+            ),
+            (
+                "https://n.test/list",
+                "<urlset><url><loc>https://n.test/p1</loc><priority>0.9</priority></url>"
+                "<url><loc>https://n.test/p2</loc></url></urlset>",
+            ),
+            ("https://n.test/", '<html><a href="/p1">one</a></html>'),
+            ("https://n.test/p1", "<html>one</html>"),
+            ("https://n.test/p2", "<html>two</html>"),
+        ]
+        pdf = pd.DataFrame(
+            {
+                "url": [u for u, _ in rows],
+                "warc_ts": pd.to_datetime(["2026-01-01"] * len(rows))
+                .tz_localize("UTC")
+                .astype("datetime64[us, UTC]"),
+                "html": [x.encode() for _, x in rows],
+                "lang": ["en"] * len(rows),
+            }
+        )
+        seeds = pd.DataFrame({"seed_url": ["https://n.test/"], "priority": [0.8]})
+        corpus = str(tmp_path / "corpus")
+        os.makedirs(corpus)
+        pdf.to_parquet(f"{corpus}/pages.parquet", index=False)
+        seeds.to_parquet(f"{corpus}/seeds.parquet", index=False)
+        cfg = CrawlConfig(base_host_budget=10, round_size=100, max_rounds=3)
+
+        eng = CrawlEngine(
+            spark, spark.read.parquet(f"{corpus}/pages.parquet"), cfg, str(tmp_path / "wd")
+        )
+        eng.init_frontier(spark.read.parquet(f"{corpus}/seeds.parquet"))
+        got = {r.url_canon: r.priority for r in eng.frontier_at(0).collect()}
+
+        oracle = OracleCrawler(pdf, cfg)
+        want = oracle._expand_sitemaps(oracle._robots("n.test").sitemaps)
+        want["https://n.test/"] = 0.8
+        assert got == want
+        assert set(got) == {"https://n.test/", "https://n.test/p1", "https://n.test/p2"}
+        eng.close()
+
+    def test_expand_job_count(self, spark):
+        """Spark jobs launched by one expansion (and the collect of its
+        result) of the cycle corpus: five BFS levels, each one checkpointed
+        capped batch and one checkpointed parse."""
+        sc = spark.sparkContext
+        sc.setJobGroup("expand_job_count", "expand_sitemaps")
+        try:
+            locs = expand_sitemaps(
+                spark, self._cycle_pages(spark), ["https://c.test/sitemap.xml"], CrawlConfig()
+            ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [r.url_canon for r in locs] == ["https://c.test/p1"]
+        assert len(sc.statusTracker().getJobIdsForGroup("expand_job_count")) <= 45
+
+    def test_sitemap_subset_released_when_parse_raises(self, spark, monkeypatch):
+        """The cached sitemap subset leaves Spark's CacheManager even when a
+        level fails: a default priority that cannot convert to double makes
+        the parse of c.xml (a urlset loc without <priority>) raise."""
+        pages = self._cycle_pages(spark)
+        persisted = []
+        persist = type(pages).persist
+
+        def spy(self, *args, **kwargs):
+            persisted.append(self)
+            return persist(self, *args, **kwargs)
+
+        monkeypatch.setattr(type(pages), "persist", spy)
+        with pytest.raises(Exception, match="not a number"):
+            expand_sitemaps(
+                spark,
+                pages,
+                ["https://c.test/sitemap.xml"],
+                CrawlConfig(sitemap_default_priority="not a number"),
+            )
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        assert persisted
+        assert all(cache.lookupCachedData(df._jdf).isEmpty() for df in persisted)
 
 
 class TestDequeue:

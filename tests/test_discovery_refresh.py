@@ -132,13 +132,13 @@ def test_lastmod_churn_skips_and_new_loc_discovered(spark):
 
 
 def test_root_hashes_distributed_body_heavy(spark, tmp_path):
-    """_root_sitemap_hashes must hash bodies IN EXECUTORS (round-3 VERDICT
+    """root_sitemap_hashes must hash bodies IN EXECUTORS (round-3 VERDICT
     task 2): many roots with fat bodies, only (url, hash, hash) triples on
     the driver. Cross-checked against driver-side recomputation."""
     import hashlib
 
     from sitemap_scan_spark.functions.canonicalize import canonicalize_one
-    from sitemap_scan_spark.sources.sitemap import parse_sitemap_one
+    from sitemap_scan_spark.sources.sitemap import parse_sitemap_one, root_sitemap_hashes
 
     n_roots, n_locs = 40, 400  # ~30 KB per body
     rows, want = [], {}
@@ -182,5 +182,5 @@ def test_root_hashes_distributed_body_heavy(spark, tmp_path):
     pdf.to_parquet(os.path.join(corpus, "pages.parquet"), index=False)
     pages = spark.read.parquet(os.path.join(corpus, "pages.parquet"))
     eng = CrawlEngine(spark, pages, CFG, str(tmp_path / "wd"))
-    got = eng._root_sitemap_hashes(sorted(want))
+    got = root_sitemap_hashes(eng.pages_canon, sorted(want), CFG.sitemap_default_priority)
     assert got == want
