@@ -15,6 +15,14 @@ Re-expresses the reference's canonicalization semantics
 - JVM-side column expressions for hashing (``sha2`` → 16-hex prefix) so the
   hot join keys never leave Tungsten.
 
+Each pandas UDF runs ONCE per row: :func:`with_canonical` and
+:func:`with_resolved_canonical` drop the rows whose URL is invalid with an
+``explode`` of a 0/1-element array, not a ``filter(isNotNull)``. Catalyst
+pushes a filter on the UDF's column below the projection that computes it,
+and ``ExtractPythonUDFs`` then plans a second ``ArrowEvalPython`` for the
+filter; nothing is pushed below a generator's output. The UDFs stay
+deterministic, so filters and projections still move through them.
+
 Semantics (RFC 3986-flavored, per BASELINE.json north_star):
   lowercase scheme + host, strip fragment, drop default ports, empty path →
   "/", dot-segment removal, percent-decode unreserved chars + uppercase
@@ -28,7 +36,7 @@ import re
 from urllib.parse import quote, unquote, urlsplit
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -184,16 +192,35 @@ def resolve_canonicalize_udf(base: pd.Series, href: pd.Series) -> pd.Series:
     return canonicalize_series(resolved)
 
 
+def _drop_null_rows(df: DataFrame, col: str) -> DataFrame:
+    """``df`` without the rows whose ``col`` is null, columns in place.
+
+    An ``explode`` of ``[col]`` (or of null), not a filter: a filter on a
+    pandas UDF's output is pushed below the projection that computes it and
+    evaluates the UDF a second time, while a generator's output stays put."""
+    c = F.col(col)
+    kept = F.explode(F.when(c.isNotNull(), F.array(c))).alias(col)
+    return df.select(*[kept if name == col else F.col(name) for name in df.columns])
+
+
+def with_canonical(df: DataFrame, url_col: str, out_col: str = "url_canon") -> DataFrame:
+    """``df`` with ``out_col`` = the canonical form of ``url_col`` — one
+    :func:`canonicalize_udf` pass per row; rows whose URL is invalid or
+    non-http(s) are dropped."""
+    return _drop_null_rows(df.withColumn(out_col, canonicalize_udf(url_col)), out_col)
+
+
 def with_resolved_canonical(
-    df,
+    df: DataFrame,
     base_col: str,
     raw_col: str,
     out_col: str = "url_canon",
-):
+) -> DataFrame:
     """Resolve ``raw`` hrefs against ``base`` and canonicalize — ONE
-    Arrow-vectorized pass (:func:`resolve_canonicalize_udf`, whose common
-    href shapes and simple-URL canonical class run in pandas C string
-    kernels; only the exotic remainder falls back to per-row urljoin).
+    Arrow-vectorized pass per row (:func:`resolve_canonicalize_udf`, whose
+    common href shapes and simple-URL canonical class run in pandas C
+    string kernels; only the exotic remainder falls back to per-row
+    urljoin).
 
     This used to be a JVM-fast/python-slow split + union; the split
     evaluated the input subtree twice and planned TWO extra stages (one of
@@ -207,9 +234,9 @@ def with_resolved_canonical(
     Returns a DataFrame with ``out_col`` (non-null) — input rows whose URL
     is invalid/non-http(s) are dropped.
     """
-    return df.withColumn(
-        out_col, resolve_canonicalize_udf(base_col, raw_col)
-    ).filter(F.col(out_col).isNotNull())
+    return _drop_null_rows(
+        df.withColumn(out_col, resolve_canonicalize_udf(base_col, raw_col)), out_col
+    )
 
 
 def url_hash_col(col: Column | str) -> Column:

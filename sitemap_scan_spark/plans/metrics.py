@@ -8,13 +8,23 @@ also materialize them as a DataFrame for SQL over run history.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .checkpoint import RoundStore
 
 
+_RUNS_SCHEMA = (
+    "round int, parent_round int, committed_at double, n_taken int, "
+    "n_fetched int, n_miss int, n_redirect int, n_blocked int, "
+    "n_new int, secs double, urls_per_sec double"
+)
+
+
 def runs_df(spark: SparkSession, store: RoundStore) -> DataFrame:
-    """One row per committed round: counters + timing (the runs ledger)."""
+    """One row per committed round: counters + timing (the runs ledger).
+    Built on the driver as an Arrow table, so Spark plans it as a
+    ``LocalRelation``: evaluating it runs no Python task."""
     rows = []
     for rnd in store.committed_rounds():
         m = store.read_manifest(rnd)
@@ -34,11 +44,10 @@ def runs_df(spark: SparkSession, store: RoundStore) -> DataFrame:
                 float(c.get("urls_per_sec", 0.0)),
             )
         )
+    names = [c.split()[0] for c in _RUNS_SCHEMA.split(", ")]
+    columns = zip(*rows) if rows else [[] for _ in names]
     return spark.createDataFrame(
-        rows,
-        "round int, parent_round int, committed_at double, n_taken int, "
-        "n_fetched int, n_miss int, n_redirect int, n_blocked int, "
-        "n_new int, secs double, urls_per_sec double",
+        pa.table({n: list(c) for n, c in zip(names, columns)}), _RUNS_SCHEMA
     )
 
 

@@ -33,12 +33,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
-from ..functions.canonicalize import canonicalize_udf, host_of_col, with_resolved_canonical
+from ..functions.canonicalize import host_of_col, with_canonical, with_resolved_canonical
 from ..functions.extract import (
     extract_links_col,
     extract_redirect_col,
     extract_text_col,
 )
+from ..functions.sqlexpr import string_in
 from ..operators.frontier import dequeue
 from ..operators.urlseen import exact_anti_join
 from ..sources.robots import parse_robots_one
@@ -113,8 +114,7 @@ class CrawlEngine:
                 F.col("warc_ts").desc(), F.col("url").desc()
             )
             (
-                pages.withColumn("url_canon", canonicalize_udf("url"))
-                .filter(F.col("url_canon").isNotNull())
+                with_canonical(pages, "url")
                 .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
@@ -268,8 +268,7 @@ class CrawlEngine:
         'Discovery'). Commits the round-0 frontier snapshot."""
         cfg = self.cfg
         seed_canon = (
-            seeds.withColumn("url_canon", canonicalize_udf("seed_url"))
-            .filter(F.col("url_canon").isNotNull())
+            with_canonical(seeds, "seed_url")
             .groupBy("url_canon")
             .agg(F.max("priority").cast("double").alias("priority"))
         )
@@ -695,8 +694,9 @@ class CrawlEngine:
         if sleeping_now:
             # a narrow NOT IN filter (no job, no exchange): the base part
             # keeps its url_canon partitioning into the dequeue's map-side
-            # group limit
-            awake = ~F.col("host").isin(sorted(sleeping_now))
+            # group limit. One SQL string, not isin(): one py4j call for the
+            # whole sleeping set instead of one per host
+            awake = ~string_in("host", sorted(sleeping_now))
             eligible_parts = [p.filter(awake) for p in eligible_parts]
 
         # 2-3. politeness dequeue: per-host window (map-side group limit
@@ -896,8 +896,12 @@ class CrawlEngine:
         columns the read API projects before the first round commits."""
         df = self.store.read_deltas(self.spark, "fetch_log")
         if df is None:
+            import pyarrow as pa
+
+            # an Arrow LocalRelation: no Python task when it is evaluated
+            cols = ("round", "rank", "url_canon", "status", "text_extracted")
             return self.spark.createDataFrame(
-                [],
+                pa.table({c: [] for c in cols}),
                 "round int, rank int, url_canon string, status string, "
                 "text_extracted string",
             )

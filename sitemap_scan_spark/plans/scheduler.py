@@ -16,7 +16,8 @@ from dataclasses import dataclass, replace
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..functions.sqlexpr import string_in
 
 
 def _field_matches(field: str, value: int) -> bool:
@@ -46,11 +47,14 @@ def matches_cron(expr: str, now: datetime) -> bool:
 
 
 def due_sites(sites: DataFrame, now: datetime) -> DataFrame:
-    """J5: filter the (tiny) sites dim to rows whose schedule fires now.
-    Collected and filtered driver-side like the reference (index.ts:40-45)."""
-    rows = sites.collect()
-    due = [r for r in rows if matches_cron(r["schedule"], now)]
-    return sites.sparkSession.createDataFrame(due, sites.schema) if due else sites.limit(0)
+    """J5: the sites dim's rows whose schedule fires now (index.ts:40-45).
+    Only the distinct schedules reach the driver, where the cron match
+    runs; the rows are filtered JVM-side by the due schedules, so the
+    result is ``sites`` under one filter, never rebuilt from driver rows.
+    A site without a schedule never fires."""
+    schedules = [r[0] for r in sites.select("schedule").distinct().collect()]
+    due = sorted(s for s in schedules if s is not None and matches_cron(s, now))
+    return sites.filter(string_in("schedule", due))
 
 
 @dataclass(frozen=True)

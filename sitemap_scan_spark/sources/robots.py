@@ -57,18 +57,6 @@ def parse_robots_one(text: str) -> RobotsRules:
     return rules
 
 
-def robots_rules_df(spark, host_rules: dict[str, RobotsRules]) -> DataFrame:
-    """Materialize parsed rules as a small dim:
-    (host, disallow: array<string>, crawl_delay: int)."""
-    rows = [
-        (h, r.disallow, r.crawl_delay)
-        for h, r in sorted(host_rules.items())
-    ]
-    return spark.createDataFrame(
-        rows, "host string, disallow array<string>, crawl_delay int"
-    )
-
-
 def robots_gate(frontier: DataFrame, rules: DataFrame) -> DataFrame:
     """Append ``blocked: boolean`` to a frontier DF having (url_canon, host).
 

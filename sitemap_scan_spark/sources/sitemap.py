@@ -13,6 +13,10 @@ parser would call ``other``). Each level checkpoints its capped batch,
 broadcast-joins it to that cached subset and runs one ``mapInPandas`` that
 decodes, parses and canonicalizes ``(kind, url_canon, priority)`` rows; the
 checkpointed rows feed both the urlset output and the index children.
+Both checkpoint jobs observe the count the loop needs (batch size, index
+children), so no job runs only to decide whether to go on. Python runs only
+where rows are: the root list enters Spark as an Arrow ``LocalRelation``
+and no frame in the loop is built from a driver list.
 Parsing is regex-based like the reference's (no XML dependency here).
 """
 
@@ -24,11 +28,13 @@ from functools import reduce
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..functions.canonicalize import canonicalize_one, canonicalize_series, host_of_col
+from ..functions.sqlexpr import string_in
 
 # root tags; ASCII-only \s and case folding, so the JVM prefilter below
 # (java.util.regex, whose default \s and (?i) are ASCII) means the same
@@ -121,7 +127,7 @@ def root_sitemap_hashes(
             yield pdf[["url_canon", "content_hash", "semantic_hash"]]
 
     rows = (
-        pages_canon.filter(F.col("url_canon").isin(roots))
+        pages_canon.filter(string_in("url_canon", roots))
         .select("url_canon", "html")
         .mapInPandas(
             hash_batches,
@@ -153,8 +159,22 @@ def expand_sitemaps(
     depth ≤ cfg.sitemap_max_depth, ≤ cfg.sitemap_max_visited sitemaps per
     host (enforced per level, deterministic by url_canon order). A listed
     sitemap counts as visited whether or not pages holds its body.
+
+    Each level is two checkpoint jobs, and each observes the count that
+    decides whether the loop goes on: the capped batch's size, and the
+    number of index children its parse found. The loop stops after a level
+    with no index children, so no level runs to find nothing. The roots
+    enter Spark as an Arrow ``LocalRelation`` and every union is of
+    checkpointed frames, coalesced to ``spark.sql.shuffle.partitions``:
+    no stage of the expansion runs a Python task without data or more tasks
+    than a shuffle.
     """
     default_priority = cfg.sitemap_default_priority
+    roots = canonical_roots(root_sitemaps)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def union(frames: list[DataFrame]) -> DataFrame:
+        return reduce(DataFrame.unionByName, frames).coalesce(n_parts)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -169,10 +189,10 @@ def expand_sitemaps(
         .persist()
     )
     to_visit = spark.createDataFrame(
-        [(u,) for u in canonical_roots(root_sitemaps)], "url_canon string"
+        pa.table({"url_canon": pa.array(roots, pa.string())})
     )
-    visited = spark.createDataFrame([], "url_canon string, host string")
-    levels = [spark.createDataFrame([], "url_canon string, priority double")]
+    batches: list[DataFrame] = []  # the visited set, one checkpoint per level
+    levels: list[DataFrame] = []  # the urlset rows, one checkpoint per level
     try:
         for _depth in range(cfg.sitemap_max_depth):
             # per-host visited cap (reference: ≤500 per site, fetcher.ts:82) —
@@ -182,41 +202,53 @@ def expand_sitemaps(
             # vs per-host ordering is indistinguishable), with no driver-side
             # collect — millions of sitemaps per level never leave the
             # executors.
-            counts = visited.groupBy("host").agg(F.count("*").alias("n_seen"))
             rn = F.row_number().over(Window.partitionBy("host").orderBy("url_canon"))
+            ranked = to_visit.withColumn("host", host_of_col("url_canon")).withColumn(
+                "_rn", rn
+            )
+            n_seen = F.lit(0)
+            if batches:
+                counts = union(batches).groupBy("host").agg(F.count("*").alias("n_seen"))
+                ranked = ranked.join(counts, "host", "left")
+                n_seen = F.coalesce(F.col("n_seen"), n_seen)
+            obs_batch = Observation()
             batch = (
-                to_visit.withColumn("host", host_of_col("url_canon"))
-                .withColumn("_rn", rn)
-                .join(counts, "host", "left")
-                .filter(
-                    F.col("_rn") + F.coalesce(F.col("n_seen"), F.lit(0))
-                    <= cfg.sitemap_max_visited
-                )
+                ranked.filter(F.col("_rn") + n_seen <= cfg.sitemap_max_visited)
                 .select("url_canon", "host")
+                .observe(obs_batch, F.count(F.lit(1)).alias("n"))
                 # materialized once: the level's parse, the next level's
                 # anti-join and the visited union all read it
                 .localCheckpoint(eager=True)
             )
-            if batch.isEmpty():
+            if not obs_batch.get["n"]:
                 break
-            visited = visited.unionByName(batch)
+            batches.append(batch)
+            obs_rows = Observation()
             rows = (
                 F.broadcast(batch.select("url_canon"))
                 .join(sm_pages, "url_canon")
                 .mapInPandas(parse, "kind string, url_canon string, priority double")
+                .observe(
+                    obs_rows,
+                    F.sum((F.col("kind") == "index").cast("long")).alias("n_index"),
+                )
                 .localCheckpoint(eager=True)
             )
             levels.append(
                 rows.filter(F.col("kind") == "urlset").select("url_canon", "priority")
             )
+            if not obs_rows.get["n_index"]:
+                break
             to_visit = (
                 rows.filter(F.col("kind") == "index")
                 .select("url_canon")
                 .distinct()
-                .join(visited.select("url_canon"), "url_canon", "left_anti")
+                .join(union(batches).select("url_canon"), "url_canon", "left_anti")
             )
     finally:
         sm_pages.unpersist()
-    return reduce(lambda a, b: a.unionByName(b), levels).groupBy("url_canon").agg(
-        F.max("priority").alias("priority")
-    )
+    if not levels:
+        return spark.createDataFrame(
+            pa.table({"url_canon": [], "priority": []}), "url_canon string, priority double"
+        )
+    return union(levels).groupBy("url_canon").agg(F.max("priority").alias("priority"))

@@ -293,8 +293,11 @@ class TestSitemapParse:
 
     def test_expand_job_count(self, spark):
         """Spark jobs launched by one expansion (and the collect of its
-        result) of the cycle corpus: five BFS levels, each one checkpointed
-        capped batch and one checkpointed parse."""
+        result) of the cycle corpus: four BFS levels, each one checkpointed
+        capped batch and one checkpointed parse, with no empty fifth level
+        and no emptiness probe. The visited and level unions stay at
+        spark.sql.shuffle.partitions, so no stage runs more tasks than a
+        shuffle (the unions used to grow by every level's partitions)."""
         sc = spark.sparkContext
         sc.setJobGroup("expand_job_count", "expand_sitemaps")
         try:
@@ -304,7 +307,16 @@ class TestSitemapParse:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert [r.url_canon for r in locs] == ["https://c.test/p1"]
-        assert len(sc.statusTracker().getJobIdsForGroup("expand_job_count")) <= 45
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup("expand_job_count")
+        assert len(jobs) <= 31
+        tasks = [
+            tracker.getStageInfo(stage).numTasks
+            for job in jobs
+            for stage in tracker.getJobInfo(job).stageIds
+            if tracker.getStageInfo(stage) is not None
+        ]
+        assert tasks and max(tasks) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def test_sitemap_subset_released_when_parse_raises(self, spark, monkeypatch):
         """The cached sitemap subset leaves Spark's CacheManager even when a
@@ -432,19 +444,19 @@ class TestWallClockPoliteness:
     only every ceil(delay/period) rounds — and the distributed engine matches
     the sequential oracle exactly on such a corpus."""
 
-    def _corpus(self, path, slow_paths=("a", "b", "c")):
+    def _corpus(self, path, slow_paths=("a", "b", "c"), slow="slow.test"):
         import os
 
         import pandas as pd
 
         os.makedirs(path, exist_ok=True)
         rows = [
-            ("https://slow.test/robots.txt", "User-agent: *\nCrawl-delay: 25"),
+            (f"https://{slow}/robots.txt", "User-agent: *\nCrawl-delay: 25"),
             (
-                "https://slow.test/sitemap.xml",
+                f"https://{slow}/sitemap.xml",
                 "<urlset>"
                 + "".join(
-                    f"<url><loc>https://slow.test/{p}</loc></url>"
+                    f"<url><loc>https://{slow}/{p}</loc></url>"
                     for p in slow_paths
                 )
                 + "</urlset>",
@@ -453,8 +465,8 @@ class TestWallClockPoliteness:
              "<urlset><url><loc>https://fast.test/x</loc></url>"
              "<url><loc>https://fast.test/y</loc></url></urlset>"),
         ]
-        for u in ("https://slow.test/",
-                  *(f"https://slow.test/{p}" for p in slow_paths),
+        for u in (f"https://{slow}/",
+                  *(f"https://{slow}/{p}" for p in slow_paths),
                   "https://fast.test/", "https://fast.test/x",
                   "https://fast.test/y"):
             rows.append((u, f"<html><body><p>page {u}</p></body></html>"))
@@ -471,7 +483,7 @@ class TestWallClockPoliteness:
         pdf.to_parquet(os.path.join(path, "pages.parquet"), index=False)
         pd.DataFrame(
             {
-                "seed_url": ["https://slow.test/", "https://fast.test/"],
+                "seed_url": [f"https://{slow}/", "https://fast.test/"],
                 "priority": [0.8, 0.8],
             }
         ).to_parquet(os.path.join(path, "seeds.parquet"), index=False)
@@ -577,6 +589,50 @@ class TestWallClockPoliteness:
             r.url_canon.startswith("https://slow")
             for r in eng.crawl_order().filter("round = 2").collect()
         )
+
+    def test_sleep_gate_builds_in_one_call_at_10k_hosts(self, spark):
+        """The gate over 10k sleeping hosts is one SQL string: it builds in
+        well under a second (isin() made one py4j call per host, 4.5 s at
+        10k) and keeps exactly the rows whose host is awake."""
+        import time
+
+        from sitemap_scan_spark.functions.sqlexpr import string_in
+
+        hosts = [f"h{i}.test" for i in range(10_000)]
+        t = time.perf_counter()
+        awake = ~string_in("host", sorted(hosts))
+        built = time.perf_counter() - t
+        assert built < 0.5, built
+        df = spark.createDataFrame(
+            pd.DataFrame({"host": ["h7.test", "awake.test", "h9999.test", "h10000.test"]})
+        )
+        assert sorted(r.host for r in df.filter(awake).collect()) == [
+            "awake.test",
+            "h10000.test",
+        ]
+
+    def test_quoted_host_gated_like_oracle(self, spark, tmp_path):
+        """A crawled host name may hold a quote and a backslash; the gate's
+        SQL literal escapes both, so the sleeping host a'b\\c.test is gated
+        exactly as the oracle gates it (dequeued in rounds 1 and 4 only)."""
+        from sim.oracle import OracleCrawler
+        from sitemap_scan_spark.plans.rounds import CrawlEngine
+
+        slow = "a'b\\c.test"
+        corpus = str(tmp_path / "corpus")
+        self._corpus(corpus, slow=slow)
+        cfg = CrawlConfig(base_host_budget=10, round_size=100, max_rounds=5)
+        eng = CrawlEngine(
+            spark, spark.read.parquet(f"{corpus}/pages.parquet"), cfg, str(tmp_path / "wd")
+        )
+        eng.run(spark.read.parquet(f"{corpus}/seeds.parquet"))
+        order = sorted(tuple(r) for r in eng.crawl_order().collect())
+        res = OracleCrawler(pd.read_parquet(f"{corpus}/pages.parquet"), cfg).crawl(
+            pd.read_parquet(f"{corpus}/seeds.parquet")
+        )
+        assert order == sorted(res.crawl_order)
+        assert sorted({rnd for rnd, _, u in order if u.startswith(f"https://{slow}/")}) == [1, 4]
+        eng.close()
 
     def test_sleep_survives_discovery_refresh(self, spark, tmp_path):
         """Regression (round-3 ADVICE): discovery_refresh commits a round
@@ -829,3 +885,92 @@ class TestFailurePathRobustness:
         assert all(f.storageLevel != StorageLevel.NONE for f in frames)
         eng.close()
         assert [f.storageLevel for f in frames] == [StorageLevel.NONE] * 2
+
+
+def _python_nodes(plan: str) -> int:
+    """ArrowEvalPython + MapInPandas nodes of a physical plan string,
+    leaving out the plans of cached relations it scans (a cached frame's
+    Python ran when it was cached, not in this query)."""
+    n, cached_at = 0, None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-|"))
+        if cached_at is not None and depth > cached_at:
+            continue
+        cached_at = depth if "InMemoryRelation" in line else None
+        n += ("ArrowEvalPython" in line) + ("MapInPandas" in line)
+    return n
+
+
+class TestNoIdlePython:
+    """Python workers only ever see rows: frames built on the driver enter
+    Spark as Arrow LocalRelations, and each pandas UDF runs once per row."""
+
+    def test_no_list_built_frame_in_a_crawl(self, spark, tmp_path, monkeypatch):
+        """A list passed to createDataFrame becomes a PythonRDD, so every
+        evaluation of the frame runs a Python task per partition. Through
+        construction, discovery, the read API before round 1, two rounds, a
+        resume into a compacting round, runs_df and refresh_discovery, every
+        createDataFrame call receives a pandas or Arrow table."""
+        import pyarrow as pa
+        from pyspark.sql import SparkSession
+
+        from sitemap_scan_spark.plans.metrics import runs_df
+
+        received = []
+        create = SparkSession.createDataFrame
+
+        def spy(self, data, *args, **kwargs):
+            received.append(type(data).__name__)
+            assert isinstance(data, (pd.DataFrame, pa.Table)), type(data)
+            return create(self, data, *args, **kwargs)
+
+        monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+        eng, seeds = _cache_engine(spark, tmp_path)
+        eng.init_frontier(seeds)
+        assert eng.crawl_order().count() == 0 and eng.fetch_log().count() == 0
+        assert eng.url_seen().count() >= 0 and eng.overview().collect()
+        assert [s["round"] for s in eng.run(seeds, max_rounds=2)] == [1, 2]
+        eng.close()
+        resumed, seeds = _cache_engine(spark, tmp_path)
+        assert [s["round"] for s in resumed.run(seeds, max_rounds=3)] == [3]
+        assert resumed._frontier_round == 3  # the compaction rebased the cache
+        assert [r["round"] for r in runs_df(spark, resumed.store).collect()] == [0, 1, 2, 3]
+        assert resumed.refresh_discovery()["re_expanded"] == 0
+        resumed.close()
+        assert received  # the spy saw the driver-built frames
+
+    def test_one_python_pass_per_row(self, spark, tmp_path, monkeypatch):
+        """The construct write, the round-0 frontier write (the seeds plan)
+        and round 1's inserts write plan one ArrowEvalPython per
+        canonicalized input: a filter on a UDF's output pushed below its
+        projection would plan a second one. Both UDFs stay deterministic."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from sitemap_scan_spark.functions.canonicalize import (
+            canonicalize_udf,
+            resolve_canonicalize_udf,
+        )
+
+        plans = {}
+        parquet = DataFrameWriter.parquet
+
+        def spy(self, path, *args, **kwargs):
+            key = "/".join(path.rstrip("/").split("/")[-2:])
+            plans[key] = self._df._jdf.queryExecution().executedPlan().toString()
+            return parquet(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+        eng, seeds = _cache_engine(spark, tmp_path)
+        eng.run(seeds, max_rounds=1)
+        eng.close()
+        construct = plans["wd/pages_canon"]
+        seeds_plan = plans["round_0000/frontier"]
+        inserts = plans["round_0001/frontier_inserts"]
+        assert _python_nodes(construct) == 1
+        assert "canonicalize_udf" in construct
+        assert _python_nodes(seeds_plan) == 1
+        assert "canonicalize_udf(seed_url" in seeds_plan
+        # one pass on each branch of the links ∪ redirects union
+        assert inserts.count("resolve_canonicalize_udf") == 2
+        assert _python_nodes(inserts) == 2
+        assert canonicalize_udf.deterministic and resolve_canonicalize_udf.deterministic

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sitemap_scan_spark.operators.frontier import include_filter, revisit_batch
-from sitemap_scan_spark.plans.scheduler import Job, JobQueue, matches_cron
+from sitemap_scan_spark.plans.scheduler import Job, JobQueue, due_sites, matches_cron
 
 
 @pytest.fixture(scope="module")
@@ -247,6 +247,39 @@ class TestScheduler:
         assert not matches_cron("* * * * 1", now)
         assert not matches_cron("bad cron", now)
         assert not matches_cron("* * * *", now)  # 4 fields
+
+    def test_due_sites_filters_jvm_side(self, spark):
+        """J5: due_sites keeps every column of the sites whose schedule
+        fires now and drops the rest (an invalid or missing schedule never
+        fires), as a filter over the sites frame itself (no frame rebuilt
+        from driver rows); with nothing due it is empty with the same
+        schema."""
+        import pandas as pd
+
+        sites = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "site_id": ["a", "b", "c", "d", "e", "f"],
+                    "schedule": ["*/5 * * * *", "31 10 * * *", "30 10 * * *",
+                                 "bad cron", "*/5 * * * *", None],
+                    "priority": [1, 2, 3, 4, 5, 6],
+                }
+            )
+        )
+        now = datetime(2026, 8, 16, 10, 30, tzinfo=timezone.utc)
+        due = due_sites(sites, now)
+        assert due.schema == sites.schema
+        assert sorted(tuple(r) for r in due.collect()) == [
+            ("a", "*/5 * * * *", 1),
+            ("c", "30 10 * * *", 3),
+            ("e", "*/5 * * * *", 5),
+        ]
+        plan = due._jdf.queryExecution().analyzed().toString()
+        assert plan.startswith("Filter ") and "LocalRelation" in plan
+        later = datetime(2026, 8, 16, 10, 31, tzinfo=timezone.utc)
+        assert [r.site_id for r in due_sites(sites, later).collect()] == ["b"]
+        never = due_sites(sites, datetime(2026, 8, 16, 10, 32, tzinfo=timezone.utc))
+        assert never.schema == sites.schema and never.count() == 0
 
     def test_queue_order_and_requeue(self):
         q = JobQueue()
